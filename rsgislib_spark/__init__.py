@@ -13,7 +13,7 @@ Design (see SURVEY.md):
    the reference's exact rounding conventions, grid-cell (H3-style) spatial
    index, STR bbox tree, deterministic image codecs;
  - DataFrame operators (``operators/``) — cell-bucketed spatial join with
-   broadcast STRtree refine, overlapping tiler via ``mapInPandas``,
+   broadcast STRtree refine, overlapping tiler via ``arrow_map``,
    zonal aggregation, kNN join, mosaic, salting, manifest-based resume;
  - scalar/agg function library (``functions/``) — band math, spectral
    indices, text-analysis + dedup + ANN similarity for training-data

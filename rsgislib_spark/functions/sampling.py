@@ -25,14 +25,6 @@ def hash_bucket(key: Column, n_buckets: int = 16, salt: str = "") -> Column:
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % n_buckets).cast("int")
 
 
-def deterministic_sample(
-    df: DataFrame, key: Column, fraction_buckets: int, n_buckets: int = 16, salt: str = ""
-) -> DataFrame:
-    """Keep rows whose hash bucket < fraction_buckets (≈ fraction_buckets /
-    n_buckets of the data) — take_random_sample, reproducibly."""
-    return df.filter(hash_bucket(key, n_buckets, salt) < fraction_buckets)
-
-
 def train_test_split(
     df: DataFrame, key: Column, test_buckets: int = 3, n_buckets: int = 10, salt: str = "tt"
 ):
@@ -40,17 +32,6 @@ def train_test_split(
     (imageutils/__init__.py:3665+) without RNG state."""
     b = hash_bucket(key, n_buckets, salt)
     return df.filter(b >= test_buckets), df.filter(b < test_buckets)
-
-
-def stratified_counts(df: DataFrame, strata: str, key: Column, keep_buckets: int = 2,
-                      n_buckets: int = 16) -> DataFrame:
-    """Per-stratum deterministic subsample then count — histo_sampling
-    (rastergis.cpp:2127-2147) shape."""
-    return (
-        df.filter(hash_bucket(key, n_buckets) < keep_buckets)
-        .groupBy(strata)
-        .agg(F.count("*").alias("n_sampled"))
-    )
 
 
 def undersample_balanced(df: DataFrame, class_col: str, key: Column) -> DataFrame:

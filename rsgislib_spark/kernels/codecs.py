@@ -343,7 +343,11 @@ class _PILBackend:
         import io
 
         img = self._Image.open(io.BytesIO(bytes(buf)))
-        if img.mode not in ("L", "RGB"):
+        if img.mode in ("P", "PA"):
+            # a palette holds colours: getbands() reports one band ("P"),
+            # so the band-count rule below would flatten it to grey
+            img = img.convert("RGB")
+        elif img.mode not in ("L", "RGB"):
             img = img.convert("RGB" if len(img.getbands()) >= 3 else "L")
         return np.asarray(img)
 
@@ -461,8 +465,9 @@ def decode_image(buf: bytes, fmt: str, h: int, w: int, bands: int = 1) -> np.nda
     if fmt == "png":
         try:
             return decode_png(bytes(buf))
-        except ValueError:
-            # non-8-bit / palette / interlaced variants → real backend
+        except (ValueError, zlib.error, struct.error):
+            # non-8-bit / palette / interlaced variants, or a stream the
+            # in-house inflate/chunk parser rejects → real backend
             for be in external_backends():
                 if be.can_decode(fmt, buf):
                     return be.decode(buf, fmt)

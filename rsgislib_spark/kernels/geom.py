@@ -69,30 +69,6 @@ def bbox_area(b) -> np.ndarray:
     return (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
 
 
-def buffer_bbox(b, buf: float):
-    b = np.asarray(b, dtype=np.float64).reshape(-1, 4).copy()
-    b[:, 0] -= buf
-    b[:, 1] -= buf
-    b[:, 2] += buf
-    b[:, 3] += buf
-    return b
-
-
-def grid_bbox(minx, miny, maxx, maxy, ncols: int, nrows: int):
-    """Split a bbox into an ncols×nrows grid of bboxes (row-major, top-left
-    first) — reference ``get_bbox_grid`` (geometrytools.py:443-506)."""
-    xs = np.linspace(minx, maxx, ncols + 1)
-    ys = np.linspace(miny, maxy, nrows + 1)
-    boxes = []
-    for r in range(nrows - 1, -1, -1):
-        for c in range(ncols):
-            boxes.append((xs[c], ys[r], xs[c + 1], ys[r + 1]))
-    return np.asarray(boxes, dtype=np.float64)
-
-
-# ------------------------------------------------------- polygon predicates
-
-
 def polygon_bbox(rings) -> np.ndarray:
     pts = np.vstack(rings)
     return np.array(
@@ -208,15 +184,6 @@ def _seg_intersect_any(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1) -> np.ndarray:
         | ((d4 == 0) & on_seg(ax0, ay0, ax1, ay1, bx1, by1))
     )
     return proper | touch
-
-
-def _rect_edges(rect):
-    minx, miny, maxx, maxy = rect
-    xs0 = np.array([minx, maxx, maxx, minx])
-    ys0 = np.array([miny, miny, maxy, maxy])
-    xs1 = np.array([maxx, maxx, minx, minx])
-    ys1 = np.array([miny, maxy, maxy, miny])
-    return xs0, ys0, xs1, ys1
 
 
 def _ring_edges(rings):

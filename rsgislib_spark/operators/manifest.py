@@ -93,7 +93,10 @@ def iceberg_available(spark: SparkSession) -> bool:
     SparkCatalog is configured AND its class loads (probed once per
     call — cheap JVM reflection, no table I/O)."""
     try:
+        # launch-time confs live on the SparkContext; catalogs set later
+        # with spark.conf.set live only in the runtime SQL conf
         confs = dict(spark.sparkContext.getConf().getAll())
+        confs.update(spark.conf.getAll)
         has_catalog = any(
             k.startswith("spark.sql.catalog.") and "iceberg" in v.lower()
             for k, v in confs.items()
@@ -131,12 +134,20 @@ def write_table(
     ``bucket(N, id)`` replaces the manual bucket loop). Otherwise falls
     back to :func:`resumable_write`'s parquet + lineage-manifest layout,
     which provides the same restart-without-recompute guarantee with no
-    extra jars. Returns a dict whose ``backend`` key says which path ran.
+    extra jars. That layout replaces or resumes buckets and cannot
+    append, so ``mode="append"`` without Iceberg raises. Returns a dict
+    whose ``backend`` key says which path ran.
     """
     spark = df.sparkSession
     if table is not None and iceberg_available(spark):
         _write_iceberg(df, table, mode)
         return {"backend": "iceberg", "table": table}
+    if mode == "append":
+        raise ValueError(
+            "write_table(mode='append') cannot be honored without an Iceberg "
+            "catalog: the parquet+manifest fallback replaces or resumes "
+            "buckets. Configure an Iceberg catalog, or use mode='replace'."
+        )
     res = resumable_write(df, out_dir, id_col, n_buckets=n_buckets, stage=stage)
     res["backend"] = "parquet+manifest"
     return res

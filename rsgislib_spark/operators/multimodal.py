@@ -20,6 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from rsgislib_spark.kernels import codecs
+from rsgislib_spark.kernels.arrowmap import arrow_map, concat_columns
 
 SUPPORTED_AUDIO = ("pcm16",)
 SUPPORTED_VIDEO = ("rawframes",)
@@ -56,60 +57,44 @@ def image_features(images: DataFrame) -> DataFrame:
     small batches pipeline them — measured ~3× in scripts/bench_decode)."""
     from rsgislib_spark.kernels.phash import phash64
 
-    def _run(it):
-        import pyarrow as pa
+    def _run(cols):
+        views, fmts, hs, ws = cols["bytes"], cols["fmt"], cols["h"], cols["w"]
+        n_rows = len(views)
+        # Lossy payloads batch through ONE pair of flat IDCT GEMMs
+        # per Arrow batch (decode_dct_batch) instead of per-image
+        # GEMM setup; raw/png decode stays per-image (no shared work).
+        jpg_idx = [
+            k for k in range(n_rows)
+            if fmts[k] == "jpg" and codecs.is_rsdc(views[k])
+        ]
+        jpg_dec = (
+            dict(zip(jpg_idx, codecs.decode_dct_batch([views[k] for k in jpg_idx])))
+            if len(jpg_idx) > 1
+            else {}
+        )
+        means, stds, thumbs, hashes = [], [], [], []
+        for k in range(n_rows):
+            img = jpg_dec.get(k)
+            if img is None:
+                img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
+            thumb = resize_nearest(img, 4, 4).astype(np.float64)
+            # mean/std from integer moment sums (exact in float64 for
+            # uint8 rasters) — cross-engine reproducible, one pass
+            n = img.size
+            s = int(img.sum(dtype=np.int64))
+            sq = int((img.astype(np.int64) ** 2).sum())
+            m = s / n
+            means.append(m)
+            stds.append(float(np.sqrt(max(sq / n - m * m, 0.0))))
+            thumbs.append(thumb.ravel().tolist())
+            hashes.append(int(phash64(img)))
+        return {"image_id": cols["image_id"], "px_mean": means, "px_std": stds,
+                "thumb16": thumbs, "phash": hashes}
 
-        for b in it:  # mapInArrow: no pandas bytes-object materialization
-            if not b.num_rows:
-                continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["image_id"].to_pylist()
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
-            # Lossy payloads batch through ONE pair of flat IDCT GEMMs
-            # per Arrow batch (decode_dct_batch) instead of per-image
-            # GEMM setup; raw/png decode stays per-image (no shared work).
-            jpg_idx = [
-                k for k in range(b.num_rows)
-                if fmts[k] == "jpg" and codecs.is_rsdc(views[k])
-            ]
-            jpg_dec = (
-                dict(zip(jpg_idx, codecs.decode_dct_batch([views[k] for k in jpg_idx])))
-                if len(jpg_idx) > 1
-                else {}
-            )
-            means, stds, thumbs, hashes = [], [], [], []
-            for k in range(b.num_rows):
-                img = jpg_dec.get(k)
-                if img is None:
-                    img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
-                thumb = resize_nearest(img, 4, 4).astype(np.float64)
-                # mean/std from integer moment sums (exact in float64 for
-                # uint8 rasters) — cross-engine reproducible, one pass
-                n = img.size
-                s = int(img.sum(dtype=np.int64))
-                sq = int((img.astype(np.int64) ** 2).sum())
-                m = s / n
-                means.append(m)
-                stds.append(float(np.sqrt(max(sq / n - m * m, 0.0))))
-                thumbs.append(thumb.ravel().tolist())
-                hashes.append(int(phash64(img)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.string()),
-                    pa.array(means, pa.float64()),
-                    pa.array(stds, pa.float64()),
-                    pa.array(thumbs, pa.list_(pa.float64())),
-                    pa.array(hashes, pa.int64()),
-                ],
-                names=["image_id", "px_mean", "px_std", "thumb16", "phash"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInArrow(
+    return arrow_map(
+        images.select("image_id", "bytes", "w", "h", "fmt"),
         _run,
-        schema="image_id string, px_mean double, px_std double, thumb16 array<double>, phash long",
+        "image_id string, px_mean double, px_std double, thumb16 array<double>, phash long",
     )
 
 
@@ -170,46 +155,30 @@ def audio_features(audio: DataFrame, frame: int = 1024) -> DataFrame:
     """Windowed RMS energy per clip (frame-level features, batch shape
     (n_frames,)). Input: (clip_id string, bytes binary, fmt string).
 
-    The payload crosses the Python boundary via ``mapInArrow`` +
-    ``codecs.arrow_binary_views`` (zero-copy buffer slices) — the same
+    The payload crosses the Python boundary via ``arrow_map`` (zero-copy
+    ``codecs.arrow_binary_views`` buffer slices) — the same
     Arrow-boundary rule as ``image_features``: ``mapInPandas`` on a
     binary column materializes one Python bytes object per row,
     measured 4.4× slower end-to-end on the decode bench."""
 
-    def _run(it):
-        import pyarrow as pa
+    def _run(cols):
+        ns, nf, rmean, rmax = [], [], [], []
+        for buf, fmt in zip(cols["bytes"], cols["fmt"]):
+            pcm = decode_audio(buf, fmt).astype(np.float64)
+            n = len(pcm) // frame
+            if n:
+                rms = np.sqrt((pcm[: n * frame] ** 2).reshape(n, frame).mean(axis=1))
+            ns.append(len(pcm))
+            nf.append(n)
+            rmean.append(float(rms.mean()) if n else 0.0)
+            rmax.append(float(rms.max()) if n else 0.0)
+        return {"clip_id": cols["clip_id"], "n_samples": ns, "n_frames": nf,
+                "rms_mean": rmean, "rms_max": rmax}
 
-        for b in it:
-            if not b.num_rows:
-                continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["clip_id"].to_pylist()
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
-            ns, nf, rmean, rmax = [], [], [], []
-            for k in range(b.num_rows):
-                pcm = decode_audio(views[k], fmts[k]).astype(np.float64)
-                n = len(pcm) // frame
-                if n:
-                    rms = np.sqrt((pcm[: n * frame] ** 2).reshape(n, frame).mean(axis=1))
-                ns.append(len(pcm))
-                nf.append(n)
-                rmean.append(float(rms.mean()) if n else 0.0)
-                rmax.append(float(rms.max()) if n else 0.0)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.string()),
-                    pa.array(ns, pa.int64()),
-                    pa.array(nf, pa.int64()),
-                    pa.array(rmean, pa.float64()),
-                    pa.array(rmax, pa.float64()),
-                ],
-                names=["clip_id", "n_samples", "n_frames", "rms_mean", "rms_max"],
-            )
-
-    return audio.select("clip_id", "bytes", "fmt").mapInArrow(
+    return arrow_map(
+        audio.select("clip_id", "bytes", "fmt"),
         _run,
-        schema="clip_id string, n_samples long, n_frames long, rms_mean double, rms_max double",
+        "clip_id string, n_samples long, n_frames long, rms_mean double, rms_max double",
     )
 
 
@@ -275,59 +244,26 @@ def sample_video_frames(video: DataFrame, every_k: int = 5) -> DataFrame:
     own (re-encoded raw) payload — the video face of the tiler's
     one-row-in, many-rows-out shape.
 
-    ``mapInArrow`` both ways: input payloads arrive as zero-copy buffer
-    views (``codecs.arrow_binary_views``), and the sampled frames leave
-    as ONE contiguous Arrow binary array built from a single
-    ``np.concatenate`` of the selected frame rows — no per-frame Python
-    bytes objects on either boundary."""
+    ``arrow_map`` both ways: input payloads arrive as zero-copy buffer
+    views, and the sampled frames leave as one contiguous Arrow binary
+    buffer per output batch, split wherever a batch would pass the int32
+    offset range — no per-frame Python bytes objects on either boundary."""
 
-    def _run(it):
-        import pyarrow as pa
+    def _run(cols):
+        ids, views, fmts = cols["clip_id"], cols["bytes"], cols["fmt"]
+        outs = []
+        for k in range(len(ids)):
+            h, w = int(cols["h"][k]), int(cols["w"][k])
+            frames = decode_video_frames(views[k], fmts[k], h, w)
+            sel = np.ascontiguousarray(frames[::every_k])
+            outs.append({"clip_id": [ids[k]] * len(sel),
+                         "frame_no": np.arange(0, len(frames), every_k),
+                         "h": np.full(len(sel), h), "w": np.full(len(sel), w),
+                         "frame": list(sel)})
+        return concat_columns(outs)
 
-        for b in it:
-            if not b.num_rows:
-                continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["clip_id"].to_pylist()
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
-            out_ids, out_no, out_h, out_w, chunks = [], [], [], [], []
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                frames = decode_video_frames(views[k], fmts[k], h, w)
-                sel = frames[::every_k]
-                if not len(sel):
-                    continue
-                out_ids.extend([ids[k]] * len(sel))
-                out_no.extend(range(0, len(frames), every_k))
-                out_h.extend([h] * len(sel))
-                out_w.extend([w] * len(sel))
-                chunks.append(np.ascontiguousarray(sel).reshape(len(sel), h * w))
-            if not out_ids:
-                continue
-            sizes = np.concatenate([
-                np.full(len(c), c.shape[1], dtype=np.int32) for c in chunks
-            ])
-            offsets = np.concatenate(([0], np.cumsum(sizes, dtype=np.int64))).astype(np.int32)
-            data = np.concatenate([c.reshape(-1) for c in chunks])
-            frame_arr = pa.BinaryArray.from_buffers(
-                pa.binary(), len(sizes),
-                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data.tobytes())],
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, pa.string()),
-                    pa.array(out_no, pa.int32()),
-                    pa.array(out_h, pa.int32()),
-                    pa.array(out_w, pa.int32()),
-                    frame_arr,
-                ],
-                names=["clip_id", "frame_no", "h", "w", "frame"],
-            )
-
-    return video.select("clip_id", "bytes", "fmt", "h", "w").mapInArrow(
+    return arrow_map(
+        video.select("clip_id", "bytes", "fmt", "h", "w"),
         _run,
-        schema="clip_id string, frame_no int, h int, w int, frame binary",
+        "clip_id string, frame_no int, h int, w int, frame binary",
     )

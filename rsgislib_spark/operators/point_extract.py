@@ -14,14 +14,12 @@ payloads.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from rsgislib_spark.datagen import PIXEL_SIZE
 from rsgislib_spark.kernels import codecs, pixelmath
+from rsgislib_spark.kernels.arrowmap import arrow_map, concat_columns
 #: Driver fence for the broadcast side (fenced_small_pdf) — patchable in tests.
 MAX_BROADCAST_POINTS = 5_000_000
 
@@ -56,49 +54,27 @@ def extract_point_values(
     src = images.select("image_id", "bytes", "w", "h", "fmt", "minx", "miny")
     schema = "pt_id long, image_id string, value double"
 
-    def _hits(it):
-        # mapInArrow + zero-copy views per the repo's Arrow-boundary rule
-        # for binary payload columns (4.4× on the decode bench).
-        import pyarrow as pa
-
-        from rsgislib_spark.operators.zonal import _batch_cols
-
+    def _hits(cols):
         pid, px, py = pts_b.value
-        for b in it:
-            if not b.num_rows:
+        ids, views, fmts = cols["image_id"], cols["bytes"], cols["fmt"]
+        outs = []
+        for k in range(len(ids)):
+            h, w = int(cols["h"][k]), int(cols["w"][k])
+            minx, miny = float(cols["minx"][k]), float(cols["miny"][k])
+            maxy = miny + h * pixel_size
+            maxx = minx + w * pixel_size
+            cand = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
+            if not cand.any():
                 continue
-            ids, views, ws, hs, fmts, minxs, minys = _batch_cols(
-                b, "image_id", "bytes", "w", "h", "fmt", "minx", "miny"
+            img = codecs.decode_image(views[k], fmts[k], h, w)
+            ix, iy, inside = pixelmath.point_pixel_lookup(
+                px[cand], py[cand], minx, maxy, pixel_size, pixel_size, w, h
             )
-            out_pid, out_img, out_val = [], [], []
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                minx, miny = float(minxs[k]), float(minys[k])
-                maxy = miny + h * pixel_size
-                maxx = minx + w * pixel_size
-                cand = (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-                if not cand.any():
-                    continue
-                img = codecs.decode_image(views[k], fmts[k], h, w)
-                ix, iy, inside = pixelmath.point_pixel_lookup(
-                    px[cand], py[cand], minx, maxy, pixel_size, pixel_size, w, h
-                )
-                vals = img[iy, ix].astype(np.float64)
-                out_pid.append(pid[cand])
-                out_img.extend([ids[k]] * int(cand.sum()))
-                out_val.append(vals)
-            if not out_img:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_pid), pa.int64()),
-                    pa.array(out_img, pa.string()),
-                    pa.array(np.concatenate(out_val), pa.float64()),
-                ],
-                names=["pt_id", "image_id", "value"],
-            )
+            outs.append({"pt_id": pid[cand], "image_id": [ids[k]] * int(cand.sum()),
+                         "value": img[iy, ix].astype(np.float64)})
+        return concat_columns(outs)
 
-    hits = src.mapInArrow(_hits, schema=schema)
+    hits = arrow_map(src, _hits, schema)
     # threshold rule: out-of-range → no-data (reference :1559-1573)
     hits = hits.withColumn(
         "value",

@@ -12,7 +12,7 @@ Reproduces the reference's three tiling conventions exactly
    (``stdimgblockiter.py:214-286``)
 
 The operator is the engine's UDTF shape (1 image row → N tile rows) via
-``mapInPandas``; decode runs once per image inside the Arrow batch, tile
+``arrow_map``; decode runs once per image inside the Arrow batch, tile
 payloads are raw uint8 (lossless past this point). This is the Spark
 replacement for the reference's tmp-file tile exchange
 (``segmentation/tiledclump.py:134-224``) — the shuffle IS the filesystem.
@@ -20,14 +20,12 @@ replacement for the reference's tmp-file tile exchange
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from rsgislib_spark.datagen import PIXEL_SIZE
 from rsgislib_spark.kernels import cells, codecs, pixelmath
+from rsgislib_spark.kernels.arrowmap import arrow_map, concat_columns
 from rsgislib_spark.operators.footprints import DEFAULT_RES
 
 TILE_SCHEMA = (
@@ -73,63 +71,30 @@ def tile_images(
         raise ValueError(f"mode must be one of {_MODES}")
     src = images.select("image_id", "bytes", "w", "h", "fmt", "minx", "miny")
 
-    def _tile(it):
-        # mapInArrow both ways: binary payload columns never round-trip
-        # through pandas object arrays (input decode views are zero-copy
-        # Arrow buffer slices; output tile payloads go straight into an
-        # Arrow binary array).
-        import pyarrow as pa
+    def _tile(cols):
+        ids, views, fmts = cols["image_id"], cols["bytes"], cols["fmt"]
+        outs = []
+        for r in range(len(ids)):
+            w, h = int(cols["w"][r]), int(cols["h"][r])
+            img = codecs.decode_image(views[r], fmts[r], h, w)
+            wins = tile_windows(mode, w, h, tile_w, tile_h, overlap, offset)
+            maxy = cols["miny"][r] + h * pixel_size
+            out = dict(zip(("tile_x", "tile_y", "x0", "y0", "tw", "th"), wins.T))
+            out["image_id"] = [ids[r]] * len(wins)
+            out["pixels"] = [
+                np.ascontiguousarray(img[y0 : y0 + th, x0 : x0 + tw])
+                for _, _, x0, y0, tw, th in wins.tolist()
+            ]
+            out["cx"] = cols["minx"][r] + (wins[:, 2] + wins[:, 4] / 2.0) * pixel_size
+            out["cy"] = maxy - (wins[:, 3] + wins[:, 5] / 2.0) * pixel_size
+            outs.append(out)
+        out = concat_columns(outs)
+        out["cell"] = cells.encode_point(out["cx"], out["cy"], res)  # once per batch
+        return out
 
-        for b in it:
-            if not b.num_rows:
-                continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ids = cols["image_id"].to_pylist()
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            minxs = cols["minx"].to_numpy(zero_copy_only=False)
-            minys = cols["miny"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            views = codecs.arrow_binary_views(cols["bytes"])
-            out = {k: [] for k in
-                   ("image_id", "tile_x", "tile_y", "x0", "y0", "tw", "th", "pixels", "cell")}
-            for r in range(b.num_rows):
-                w, h = int(ws[r]), int(hs[r])
-                img = codecs.decode_image(views[r], fmts[r], h, w)
-                wins = tile_windows(mode, w, h, tile_w, tile_h, overlap, offset)
-                maxy = minys[r] + h * pixel_size
-                cx = minxs[r] + (wins[:, 2] + wins[:, 4] / 2.0) * pixel_size
-                cy = maxy - (wins[:, 3] + wins[:, 5] / 2.0) * pixel_size
-                cc = cells.encode_point(cx, cy, res)
-                for k, (tx, ty, x0, y0, tw, th) in enumerate(wins):
-                    out["image_id"].append(ids[r])
-                    out["tile_x"].append(int(tx))
-                    out["tile_y"].append(int(ty))
-                    out["x0"].append(int(x0))
-                    out["y0"].append(int(y0))
-                    out["tw"].append(int(tw))
-                    out["th"].append(int(th))
-                    out["pixels"].append(
-                        np.ascontiguousarray(img[y0 : y0 + th, x0 : x0 + tw]).tobytes()
-                    )
-                    out["cell"].append(int(cc[k]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["image_id"], pa.string()),
-                    pa.array(out["tile_x"], pa.int32()),
-                    pa.array(out["tile_y"], pa.int32()),
-                    pa.array(out["x0"], pa.int32()),
-                    pa.array(out["y0"], pa.int32()),
-                    pa.array(out["tw"], pa.int32()),
-                    pa.array(out["th"], pa.int32()),
-                    pa.array(out["pixels"], pa.binary()),
-                    pa.array(out["cell"], pa.int64()),
-                ],
-                names=["image_id", "tile_x", "tile_y", "x0", "y0",
-                       "tw", "th", "pixels", "cell"],
-            )
-
-    return src.mapInArrow(_tile, schema=TILE_SCHEMA)
+    # per Arrow batch, not per partition: with maxRecordsPerBatch ≈ 64
+    # the next batch's transfer overlaps this batch's decode + tiling
+    return arrow_map(src, _tile, TILE_SCHEMA)
 
 
 def tile_manifest(tiles: DataFrame) -> DataFrame:
@@ -173,62 +138,32 @@ def tile_batches(
         "xs array<int>, ys array<int>"
     )
 
-    def _run(it):
-        # mapInArrow + zero-copy payload views per the repo's
-        # Arrow-boundary rule for binary columns (4.4× on the decode
-        # bench); tensors leave as one pandas-free RecordBatch per
-        # Arrow input batch.
-        import pyarrow as pa
-
-        from rsgislib_spark.operators.zonal import _batch_cols
-
+    def _run(cols):
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        buf_t, buf_id, buf_x, buf_y = [], [], [], []
-        seq = 0
-        rows = []
+        ids, views, fmts = cols["image_id"], cols["bytes"], cols["fmt"]
+        blocks, b_ids, b_xs, b_ys = [], [], [], []
+        for k in range(len(ids)):
+            w, h = int(cols["w"][k]), int(cols["h"][k])
+            if w < block or h < block:
+                continue  # reference iterator requires block ≤ image
+            img = codecs.decode_image(views[k], fmts[k], h, w)
+            for xb, yb, x0, y0, tw, th in block_windows_anchored(w, h, block):
+                blocks.append(img[y0 : y0 + th, x0 : x0 + tw])
+                b_ids.append(ids[k])
+                b_xs.append(int(xb))
+                b_ys.append(int(yb))
+        if not blocks:
+            return None
+        cuts = [slice(i, i + batch_size) for i in range(0, len(blocks), batch_size)]
+        return {
+            "batch_id": [f"p{pid}_b{seq}" for seq in range(len(cuts))],
+            "n": [len(b_ids[c]) for c in cuts],
+            "tensor": [np.stack(blocks[c]).astype(np.uint8, copy=False) for c in cuts],
+            "image_ids": [b_ids[c] for c in cuts],
+            "xs": [b_xs[c] for c in cuts],
+            "ys": [b_ys[c] for c in cuts],
+        }
 
-        def flush():
-            nonlocal seq, buf_t, buf_id, buf_x, buf_y
-            if not buf_t:
-                return
-            tensor = np.stack(buf_t).astype(np.uint8)
-            rows.append(
-                (f"p{pid}_b{seq}", len(buf_t), tensor.tobytes(),
-                 list(buf_id), [int(v) for v in buf_x], [int(v) for v in buf_y])
-            )
-            seq += 1
-            buf_t, buf_id, buf_x, buf_y = [], [], [], []
-
-        for b in it:
-            if not b.num_rows:
-                continue
-            ids, views, ws, hs, fmts = _batch_cols(
-                b, "image_id", "bytes", "w", "h", "fmt"
-            )
-            for k in range(b.num_rows):
-                w, h = int(ws[k]), int(hs[k])
-                if w < block or h < block:
-                    continue  # reference iterator requires block ≤ image
-                img = codecs.decode_image(views[k], fmts[k], h, w)
-                for xb, yb, x0, y0, tw, th in block_windows_anchored(w, h, block):
-                    buf_t.append(img[y0 : y0 + th, x0 : x0 + tw])
-                    buf_id.append(ids[k])
-                    buf_x.append(xb)
-                    buf_y.append(yb)
-                    if len(buf_t) >= batch_size:
-                        flush()
-        flush()
-        if rows:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[0] for r in rows], pa.string()),
-                    pa.array([r[1] for r in rows], pa.int32()),
-                    pa.array([r[2] for r in rows], pa.binary()),
-                    pa.array([r[3] for r in rows], pa.list_(pa.string())),
-                    pa.array([r[4] for r in rows], pa.list_(pa.int32())),
-                    pa.array([r[5] for r in rows], pa.list_(pa.int32())),
-                ],
-                names=["batch_id", "n", "tensor", "image_ids", "xs", "ys"],
-            )
-
-    return src.mapInArrow(_run, schema=schema)
+    # whole partition: batches of blocks run across Arrow batch
+    # boundaries, and batch ids number the partition's sequence
+    return arrow_map(src, _run, schema, whole_partition=True)

@@ -20,42 +20,23 @@ Physical shape: one Arrow pass over images emits PARTIAL aggregates
 (zone, count, sum, sumsq, min, max) — the map-side combine — then a
 tiny ``groupBy(zone).agg`` finalizes. Pixel payloads never shuffle;
 only O(zones) partial rows do. Binary payload columns cross the Python
-boundary via ``mapInArrow`` + ``codecs.arrow_binary_views`` (zero-copy
-buffer slices) — the repo's Arrow-boundary rule: ``mapInPandas`` on a
-bytes column materializes per-row Python objects (measured 4.4× slower
-end-to-end on the decode bench).
+boundary via ``kernels.arrowmap.arrow_map`` (zero-copy buffer slices) —
+the repo's Arrow-boundary rule: ``mapInPandas`` on a bytes column
+materializes per-row Python objects (measured 4.4× slower end-to-end on
+the decode bench).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from rsgislib_spark.datagen import PIXEL_SIZE
 from rsgislib_spark.kernels import codecs, pixelmath
+from rsgislib_spark.kernels.arrowmap import arrow_map, concat_columns
 from rsgislib_spark.operators.spatial_join import ZoneIndex
 #: Driver fence for the broadcast side (fenced_small_pdf) — patchable in tests.
 MAX_BROADCAST_ZONES = 500_000
-
-
-def _batch_cols(b, *names):
-    """Arrow-batch columns by name: binary columns become zero-copy
-    views, ints become numpy, the rest python lists."""
-    byname = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-    out = []
-    for n in names:
-        arr = byname[n]
-        t = arr.type
-        import pyarrow as pa
-
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            out.append(codecs.arrow_binary_views(arr))
-        elif pa.types.is_integer(t) or pa.types.is_floating(t):
-            out.append(arr.to_numpy(zero_copy_only=False))
-        else:
-            out.append(arr.to_pylist())
-    return out
 
 
 _PARTIAL_SCHEMA = (
@@ -102,50 +83,35 @@ def segment_stats(images: DataFrame, segments: DataFrame) -> DataFrame:
         "mn double, mx double"
     )
 
-    def _partial(it):
-        import pyarrow as pa
-
-        for b in it:
-            if not b.num_rows:
-                continue
-            ids, views, ws, hs, fmts, seg_views = _batch_cols(
-                b, "image_id", "bytes", "w", "h", "fmt", "seg_bytes"
+    def _partial(cols):
+        ids, views, fmts, seg_views = cols["image_id"], cols["bytes"], cols["fmt"], cols["seg_bytes"]
+        outs = []
+        for k in range(len(ids)):
+            h, w = int(cols["h"][k]), int(cols["w"][k])
+            img = (
+                codecs.decode_image(views[k], fmts[k], h, w)
+                .astype(np.float64)
+                .ravel()
             )
-            outs = []
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                img = (
-                    codecs.decode_image(views[k], fmts[k], h, w)
-                    .astype(np.float64)
-                    .ravel()
-                )
-                lab = np.frombuffer(seg_views[k], dtype=np.int32, count=h * w)
-                nz = int(lab.max()) + 1
-                cnt = np.bincount(lab, minlength=nz)
-                s = np.bincount(lab, weights=img, minlength=nz)
-                ss = np.bincount(lab, weights=img * img, minlength=nz)
-                order = np.argsort(lab, kind="stable")
-                sorted_vals = img[order]
-                bounds = np.concatenate(([0], np.cumsum(cnt)))
-                mn = np.array([sorted_vals[bounds[i]:bounds[i + 1]].min() if cnt[i] else np.nan for i in range(nz)])
-                mx = np.array([sorted_vals[bounds[i]:bounds[i + 1]].max() if cnt[i] else np.nan for i in range(nz)])
-                keep = cnt > 0
-                nk = int(keep.sum())
-                outs.append(pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([ids[k]] * nk, pa.string()),
-                        pa.array(np.arange(nz, dtype=np.int32)[keep], pa.int32()),
-                        pa.array(cnt[keep].astype(np.int64), pa.int64()),
-                        pa.array(s[keep], pa.float64()),
-                        pa.array(ss[keep], pa.float64()),
-                        pa.array(mn[keep], pa.float64()),
-                        pa.array(mx[keep], pa.float64()),
-                    ],
-                    names=["image_id", "zone", "n", "s", "ss", "mn", "mx"],
-                ))
-            yield from outs
+            lab = np.frombuffer(seg_views[k], dtype=np.int32, count=h * w)
+            nz = int(lab.max()) + 1
+            cnt = np.bincount(lab, minlength=nz)
+            s = np.bincount(lab, weights=img, minlength=nz)
+            ss = np.bincount(lab, weights=img * img, minlength=nz)
+            order = np.argsort(lab, kind="stable")
+            sorted_vals = img[order]
+            bounds = np.concatenate(([0], np.cumsum(cnt)))
+            mn = np.array([sorted_vals[bounds[i]:bounds[i + 1]].min() if cnt[i] else np.nan for i in range(nz)])
+            mx = np.array([sorted_vals[bounds[i]:bounds[i + 1]].max() if cnt[i] else np.nan for i in range(nz)])
+            keep = cnt > 0
+            outs.append({
+                "image_id": [ids[k]] * int(keep.sum()),
+                "zone": np.arange(nz, dtype=np.int32)[keep],
+                "n": cnt[keep], "s": s[keep], "ss": ss[keep], "mn": mn[keep], "mx": mx[keep],
+            })
+        return concat_columns(outs)
 
-    partials = joined.mapInArrow(_partial, schema=schema)
+    partials = arrow_map(joined, _partial, schema)
     mean = F.col("s") / F.col("n")
     var = F.col("ss") / F.col("n") - mean * mean
     # one partial row per (image, zone) already — finalize per composite key
@@ -171,32 +137,19 @@ def segment_histogram(images: DataFrame, segments: DataFrame) -> DataFrame:
     )
     schema = "image_id string, zone int, value int, cnt long"
 
-    def _hist(it):
-        import pyarrow as pa
+    def _hist(cols):
+        ids, views, fmts, seg_views = cols["image_id"], cols["bytes"], cols["fmt"], cols["seg_bytes"]
+        outs = []
+        for k in range(len(ids)):
+            h, w = int(cols["h"][k]), int(cols["w"][k])
+            img = codecs.decode_image(views[k], fmts[k], h, w).ravel().astype(np.int64)
+            lab = np.frombuffer(seg_views[k], dtype=np.int32, count=h * w).astype(np.int64)
+            uniq, cnt = np.unique(lab * 256 + img, return_counts=True)
+            outs.append({"image_id": [ids[k]] * len(uniq), "zone": uniq // 256,
+                         "value": uniq % 256, "cnt": cnt})
+        return concat_columns(outs)
 
-        for b in it:
-            if not b.num_rows:
-                continue
-            ids, views, ws, hs, fmts, seg_views = _batch_cols(
-                b, "image_id", "bytes", "w", "h", "fmt", "seg_bytes"
-            )
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                img = codecs.decode_image(views[k], fmts[k], h, w).ravel().astype(np.int64)
-                lab = np.frombuffer(seg_views[k], dtype=np.int32, count=h * w).astype(np.int64)
-                key = lab * 256 + img
-                uniq, cnt = np.unique(key, return_counts=True)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([ids[k]] * len(uniq), pa.string()),
-                        pa.array((uniq // 256).astype(np.int32), pa.int32()),
-                        pa.array((uniq % 256).astype(np.int32), pa.int32()),
-                        pa.array(cnt.astype(np.int64), pa.int64()),
-                    ],
-                    names=["image_id", "zone", "value", "cnt"],
-                )
-
-    return joined.mapInArrow(_hist, schema=schema)
+    return arrow_map(joined, _hist, schema)
 
 
 def segment_mode(images: DataFrame, segments: DataFrame) -> DataFrame:
@@ -242,80 +195,68 @@ def zonal_band_stats(
 
     src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
 
-    def _partial(it):
-        import pyarrow as pa
-
+    def _partial(cols):
         zx: ZoneIndex = zindex_b.value
-        for b in it:
-            if not b.num_rows:
-                continue
-            views, ws, hs, fmts, minxs, minys = _batch_cols(
-                b, "bytes", "w", "h", "fmt", "minx", "miny"
+        views, ws, hs, fmts, minxs, minys = (
+            cols[c] for c in ("bytes", "w", "h", "fmt", "minx", "miny")
+        )
+        acc = {}
+        for k in range(len(views)):
+            h, w = int(hs[k]), int(ws[k])
+            minx, miny = float(minxs[k]), float(minys[k])
+            maxy = miny + h * pixel_size
+            maxx = minx + w * pixel_size
+            qi, zi = zx.tree.query(
+                np.array([[minx, miny, maxx, maxy]])
             )
-            acc = {}
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                minx, miny = float(minxs[k]), float(minys[k])
-                maxy = miny + h * pixel_size
-                maxx = minx + w * pixel_size
-                qi, zi = zx.tree.query(
-                    np.array([[minx, miny, maxx, maxy]])
+            if len(zi) == 0:
+                continue
+            img = codecs.decode_image(views[k], fmts[k], h, w).astype(np.float64)
+            for z in zi:
+                rings = zx.rings[z]
+                zb = zx.bboxes[z]
+                # envelope → pixel window with the reference's rule
+                x1, y1, xs, ys, have = pixelmath.zonal_window(
+                    [zb[0]], [zb[2]], [zb[1]], [zb[3]],
+                    minx, maxy, pixel_size, pixel_size, w, h,
                 )
-                if len(zi) == 0:
+                if not have[0]:
                     continue
-                img = codecs.decode_image(views[k], fmts[k], h, w).astype(np.float64)
-                for z in zi:
-                    rings = zx.rings[z]
-                    zb = zx.bboxes[z]
-                    # envelope → pixel window with the reference's rule
-                    x1, y1, xs, ys, have = pixelmath.zonal_window(
-                        [zb[0]], [zb[2]], [zb[1]], [zb[3]],
-                        minx, maxy, pixel_size, pixel_size, w, h,
-                    )
-                    if not have[0]:
-                        continue
-                    x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
-                    sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
-                    # pixel centers of the window
-                    pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
-                    pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
-                    gx, gy = np.meshgrid(pcx, pcy)
-                    mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
-                    vals = sub[mask]
-                    if no_data_val is not None:
-                        vals = vals[vals != no_data_val]
-                    vals = vals[(vals >= min_thres) & (vals <= max_thres)]
-                    if vals.size == 0:
-                        continue
-                    zid = int(zx.zone_ids[z])
-                    a = acc.get(zid)
-                    stat = (
-                        vals.size, float(vals.sum()), float((vals * vals).sum()),
-                        float(vals.min()), float(vals.max()),
-                    )
-                    if a is None:
-                        acc[zid] = list(stat)
-                    else:
-                        a[0] += stat[0]
-                        a[1] += stat[1]
-                        a[2] += stat[2]
-                        a[3] = min(a[3], stat[3])
-                        a[4] = max(a[4], stat[4])
-            if acc:
-                zids = sorted(acc)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.array(zids, dtype=np.int64), pa.int64()),
-                        pa.array([acc[z][0] for z in zids], pa.int64()),
-                        pa.array([acc[z][1] for z in zids], pa.float64()),
-                        pa.array([acc[z][2] for z in zids], pa.float64()),
-                        pa.array([acc[z][3] for z in zids], pa.float64()),
-                        pa.array([acc[z][4] for z in zids], pa.float64()),
-                    ],
-                    names=["zone_id", "n", "s", "ss", "mn", "mx"],
+                x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
+                sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
+                # pixel centers of the window
+                pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
+                pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
+                gx, gy = np.meshgrid(pcx, pcy)
+                mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
+                vals = sub[mask]
+                if no_data_val is not None:
+                    vals = vals[vals != no_data_val]
+                vals = vals[(vals >= min_thres) & (vals <= max_thres)]
+                if vals.size == 0:
+                    continue
+                zid = int(zx.zone_ids[z])
+                a = acc.get(zid)
+                stat = (
+                    vals.size, float(vals.sum()), float((vals * vals).sum()),
+                    float(vals.min()), float(vals.max()),
                 )
+                if a is None:
+                    acc[zid] = list(stat)
+                else:
+                    a[0] += stat[0]
+                    a[1] += stat[1]
+                    a[2] += stat[2]
+                    a[3] = min(a[3], stat[3])
+                    a[4] = max(a[4], stat[4])
+        if not acc:
+            return None
+        zids = sorted(acc)
+        return {"zone_id": zids, **{
+            c: [acc[z][i] for z in zids] for i, c in enumerate(("n", "s", "ss", "mn", "mx"))
+        }}
 
-    partials = src.mapInArrow(_partial, schema=_PARTIAL_SCHEMA)
+    partials = arrow_map(src, _partial, _PARTIAL_SCHEMA)
     return _finalize(partials)
 
 
@@ -456,67 +397,55 @@ def zonal_band_mode_median(
     zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
     src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
 
-    def _hist(it):
-        import pyarrow as pa
-
+    def _hist(cols):
         zx: ZoneIndex = zindex_b.value
-        for b in it:
-            if not b.num_rows:
+        views, ws, hs, fmts, minxs, minys = (
+            cols[c] for c in ("bytes", "w", "h", "fmt", "minx", "miny")
+        )
+        acc: dict = {}
+        for k in range(len(views)):
+            h, w = int(hs[k]), int(ws[k])
+            minx, miny = float(minxs[k]), float(minys[k])
+            maxy = miny + h * pixel_size
+            maxx = minx + w * pixel_size
+            qi, zi = zx.tree.query(np.array([[minx, miny, maxx, maxy]]))
+            if len(zi) == 0:
                 continue
-            views, ws, hs, fmts, minxs, minys = _batch_cols(
-                b, "bytes", "w", "h", "fmt", "minx", "miny"
-            )
-            acc: dict = {}
-            for k in range(b.num_rows):
-                h, w = int(hs[k]), int(ws[k])
-                minx, miny = float(minxs[k]), float(minys[k])
-                maxy = miny + h * pixel_size
-                maxx = minx + w * pixel_size
-                qi, zi = zx.tree.query(np.array([[minx, miny, maxx, maxy]]))
-                if len(zi) == 0:
+            img = codecs.decode_image(views[k], fmts[k], h, w)
+            for z in zi:
+                rings = zx.rings[z]
+                zb = zx.bboxes[z]
+                x1, y1, xs, ys, have = pixelmath.zonal_window(
+                    [zb[0]], [zb[2]], [zb[1]], [zb[3]],
+                    minx, maxy, pixel_size, pixel_size, w, h,
+                )
+                if not have[0]:
                     continue
-                img = codecs.decode_image(views[k], fmts[k], h, w)
-                for z in zi:
-                    rings = zx.rings[z]
-                    zb = zx.bboxes[z]
-                    x1, y1, xs, ys, have = pixelmath.zonal_window(
-                        [zb[0]], [zb[2]], [zb[1]], [zb[3]],
-                        minx, maxy, pixel_size, pixel_size, w, h,
-                    )
-                    if not have[0]:
-                        continue
-                    x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
-                    sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
-                    pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
-                    pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
-                    gx, gy = np.meshgrid(pcx, pcy)
-                    mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
-                    vals = sub[mask].astype(np.int64)
-                    if no_data_val is not None:
-                        vals = vals[vals != no_data_val]
-                    if not vals.size:
-                        continue
-                    zid = int(zx.zone_ids[z])
-                    counts = np.bincount(vals, minlength=256)
-                    prev = acc.get(zid)
-                    acc[zid] = counts if prev is None else prev + counts
-            if not acc:
-                continue
-            zids, values, cnts = [], [], []
-            for zid, counts in acc.items():
-                nz = np.flatnonzero(counts)
-                zids.extend([zid] * len(nz))
-                values.extend(int(v) for v in nz)
-                cnts.extend(int(counts[v]) for v in nz)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(zids, pa.int64()),
-                    pa.array(values, pa.int32()),
-                    pa.array(cnts, pa.int64()),
-                ],
-                names=["zone_id", "value", "cnt"],
-            )
+                x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
+                sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
+                pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
+                pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
+                gx, gy = np.meshgrid(pcx, pcy)
+                mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
+                vals = sub[mask].astype(np.int64)
+                if no_data_val is not None:
+                    vals = vals[vals != no_data_val]
+                if not vals.size:
+                    continue
+                zid = int(zx.zone_ids[z])
+                counts = np.bincount(vals, minlength=256)
+                prev = acc.get(zid)
+                acc[zid] = counts if prev is None else prev + counts
+        if not acc:
+            return None
+        zids = sorted(acc)
+        nz = [np.flatnonzero(acc[z]) for z in zids]
+        return {
+            "zone_id": np.repeat(zids, [len(v) for v in nz]),
+            "value": np.concatenate(nz),
+            "cnt": np.concatenate([acc[z][v] for z, v in zip(zids, nz)]),
+        }
 
-    partial = src.mapInArrow(_hist, schema="zone_id long, value int, cnt long")
+    partial = arrow_map(src, _hist, "zone_id long, value int, cnt long")
     hist = partial.groupBy("zone_id", "value").agg(F.sum("cnt").alias("cnt"))
     return mode_median_from_histogram(hist, ["zone_id"])

@@ -29,26 +29,40 @@ exactly as it is on a real cluster.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rsgislib_spark.kernels import geom
+from rsgislib_spark.kernels.arrowmap import arrow_map
 
 TILE = 96
 
 
 # ------------------------------------------------------------ zone prep
 
+#: Driver fence for the zone rectangles built by :func:`load_zones_pdf`
+#: (mirrors operators.zonal.MAX_BROADCAST_ZONES) — patchable in tests.
+MAX_BROADCAST_ZONES = 500_000
+
+
 def load_zones_pdf(sf_dir: str) -> pd.DataFrame:
     """Zone rectangles (GEO_ZONES derivation, queries.py) built directly
     from the supplier parquet with pandas — keeps driver-side prep off
-    the Spark scheduler (it was a measurable fixed cost per job)."""
-    s = pd.read_parquet(f"{sf_dir}/supplier.parquet", columns=["s_suppkey"])[
-        "s_suppkey"
-    ].to_numpy(np.int64)
+    the Spark scheduler (it was a measurable fixed cost per job). The
+    row count is checked first from the parquet footers (no Spark job,
+    no column read) against :data:`MAX_BROADCAST_ZONES`."""
+    import pyarrow.dataset as ds
+
+    path = f"{sf_dir}/supplier.parquet"
+    n = ds.dataset(path, format="parquet").count_rows()
+    if n > MAX_BROADCAST_ZONES:
+        raise ValueError(
+            f"pipeline zone index would build {n} zone polygons on the driver "
+            f"(max_rows={MAX_BROADCAST_ZONES}). Bucket zones to cells and "
+            "aggregate per cell instead (operators.spatial_join.spatial_join_cells)."
+        )
+    s = pd.read_parquet(path, columns=["s_suppkey"])["s_suppkey"].to_numpy(np.int64)
     zminx = np.where(s % 10 == 0, 45000 + (s % 7) * 100, (s * 7919) % 90000).astype(
         np.float64
     ) + 0.25
@@ -193,6 +207,26 @@ def _tile_stats_chunk(keys: np.ndarray, w: int, h: int, tile: int, radius: int):
     }
 
 
+def _shape_chunks(ws: np.ndarray, hs: np.ndarray, tiebreak: np.ndarray):
+    """The one shape-group/CHUNK loop of every kernel here: row indices
+    ordered by (w, h, tiebreak), cut into runs of one image shape and
+    each run into CHUNK-sized ``(idx, w, h)`` slices — a same-shape
+    stack is what the 3-D numpy kernels need."""
+    order = np.lexsort((tiebreak, hs, ws))
+    sw, sh = ws[order], hs[order]
+    cuts = np.flatnonzero((sw[1:] != sw[:-1]) | (sh[1:] != sh[:-1])) + 1
+    bounds = np.r_[0, cuts, len(order)]
+    for i, j in zip(bounds[:-1], bounds[1:]):
+        w, h = int(sw[i]), int(sh[i])
+        for c0 in range(i, j, CHUNK):
+            yield order[c0 : min(c0 + CHUNK, j)], w, h
+
+
+def _lattice(keys: np.ndarray):
+    """Grid source of the synthetic path: the band lattice of the keys."""
+    return lambda idx, w, h: lattice_grid(keys[idx], w, h)
+
+
 def tile_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataFrame:
     """Stage 3: tiler UDTF with pixel kernels fused. Images are grouped by
     shape and processed CHUNK at a time in a single 3-D numpy pass:
@@ -201,52 +235,27 @@ def tile_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataF
     remainder tiles, create_tiles semantics). Emits per-tile stats rows
     only — pixels never leave the task."""
 
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            keys_all = pdf["image_key"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int32)
-            hs = pdf["h"].to_numpy(np.int32)
-            frames = []
-            order = np.lexsort((keys_all, hs, ws))
-            i = 0
-            while i < len(order):
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < len(order) and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                grp = keys_all[order[i:j]]
-                for c0 in range(0, len(grp), CHUNK):
-                    frames.append(
-                        pd.DataFrame(
-                            _tile_stats_chunk(grp[c0 : c0 + CHUNK], w, h, tile, radius)
-                        )
-                    )
-                i = j
-            yield pd.concat(frames, ignore_index=True)
+    def _run(cols):
+        keys = cols["image_key"]
+        frames = [
+            _tile_stats_chunk(keys[idx], w, h, tile, radius)
+            for idx, w, h in _shape_chunks(cols["w"], cols["h"], keys)
+        ]
+        return {c: np.concatenate([f[c] for f in frames]) for c in frames[0]}
 
     schema = (
         "image_key long, tile_x int, tile_y int, n_px long, sum_v long, "
         "min_v long, max_v long, focal_sum long, focal_cnt long"
     )
-    return images.select("image_key", "w", "h").mapInPandas(_run, schema=schema)
+    return arrow_map(images.select("image_key", "w", "h"), _run, schema)
 
 
-def _image_stats_chunk(keys: np.ndarray, w: int, h: int, radius: int):
-    """Whole-image reductions for a CHUNK of same-shape images — the
-    per-tile → per-image rollup of :func:`_tile_stats_chunk` fused away
-    algebraically (Σ over tiles of tile-sums ≡ whole-image sum), so no
-    reduceat/tile assembly runs at all. Same band + focal kernels."""
-    grid = lattice_grid(keys, w, h)
-    return _stats_from_grid(grid, radius)
-
-
-def _stats_from_grid(grid: np.ndarray, radius: int):
+def _stats_from_grid(grid: np.ndarray, radius: int) -> dict:
     """Whole-image band + focal reductions over a (m, h, w) uint8 pixel
-    stack — the kernel half of :func:`_image_stats_chunk`, shared by the
-    synthetic path (grid derived from keys) and the DECODED path (grid
-    decoded from stored bytes by kernels.codecs)."""
+    stack — the per-tile → per-image rollup of :func:`_tile_stats_chunk`
+    fused away algebraically (Σ over tiles of tile-sums ≡ whole-image
+    sum), so no reduceat/tile assembly runs at all. The grid comes from
+    the synthetic lattice or from payloads decoded by kernels.codecs."""
     m, h, w = grid.shape
 
     row = np.empty((m, h, w), dtype=np.int16)
@@ -265,126 +274,83 @@ def _stats_from_grid(grid: np.ndarray, radius: int):
     cx[:radius] = cx[-radius:] = 2 * radius
     cy = np.full(h, 2 * radius + 1, dtype=np.int64)
     cy[:radius] = cy[-radius:] = 2 * radius
-    focal_cnt = int(cy.sum() * cx.sum())
-    return (
-        grid.sum(axis=(1, 2), dtype=np.int64),
-        grid.min(axis=(1, 2)).astype(np.int64),
-        grid.max(axis=(1, 2)).astype(np.int64),
-        fs.sum(axis=(1, 2), dtype=np.int64),
-        focal_cnt,
-    )
+    return {
+        "sum_v": grid.sum(axis=(1, 2), dtype=np.int64),
+        "min_v": grid.min(axis=(1, 2)).astype(np.int64),
+        "max_v": grid.max(axis=(1, 2)).astype(np.int64),
+        "focal_sum": fs.sum(axis=(1, 2), dtype=np.int64),
+        "focal_cnt": int(cy.sum() * cx.sum()),
+    }
+
+
+STAT_COLS = ["n_tiles", "n_px", "sum_v", "min_v", "max_v", "focal_sum", "focal_cnt"]
+
+
+def _image_stats(ws, hs, tiebreak, grid_of, tile: int, radius: int = 1) -> dict:
+    """Per-image STAT_COLS in input row order: the shape-group/CHUNK loop
+    feeding ``grid_of(idx, w, h)`` stacks to :func:`_stats_from_grid`."""
+    n = len(ws)
+    st = {c: np.empty(n, np.int64) for c in STAT_COLS}
+    for idx, w, h in _shape_chunks(ws, hs, tiebreak):
+        for c, v in _stats_from_grid(grid_of(idx, w, h), radius).items():
+            st[c][idx] = v
+        st["n_tiles"][idx] = -(-w // tile) * -(-h // tile)
+        st["n_px"][idx] = w * h
+    return st
 
 
 def image_stats_df(images: DataFrame, tile: int = TILE, radius: int = 1) -> DataFrame:
     """Fused tiler + kernels + per-image reduction: only ONE stats row
     per image reaches the Arrow boundary (640k rows instead of ~5.5M
-    tile rows at replicate 32), assembled as ONE DataFrame per Arrow
-    batch (per-chunk DataFrame construction dominated the stubbed-kernel
-    profile). Footprint columns pass through for the zonal match."""
+    tile rows at replicate 32). Footprint columns pass through for the
+    zonal match."""
     if radius != 1:
         raise ValueError("fused image stats kernel supports radius=1")
 
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            keys_all = pdf["image_key"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int32)
-            hs = pdf["h"].to_numpy(np.int32)
-            bbox = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-            n = len(keys_all)
-            order = np.lexsort((keys_all, hs, ws))
-            out_keys = keys_all[order]
-            out_bbox = bbox[order]
-            sum_v = np.empty(n, np.int64)
-            min_v = np.empty(n, np.int64)
-            max_v = np.empty(n, np.int64)
-            focal_sum = np.empty(n, np.int64)
-            focal_cnt = np.empty(n, np.int64)
-            n_tiles = np.empty(n, np.int64)
-            n_px = np.empty(n, np.int64)
-            i = 0
-            while i < n:
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < n and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                nt = -(-w // tile) * -(-h // tile)
-                for c0 in range(i, j, CHUNK):
-                    c1 = min(c0 + CHUNK, j)
-                    s, mn, mx, fsum, fcnt = _image_stats_chunk(
-                        out_keys[c0:c1], w, h, radius
-                    )
-                    sum_v[c0:c1] = s
-                    min_v[c0:c1] = mn
-                    max_v[c0:c1] = mx
-                    focal_sum[c0:c1] = fsum
-                    focal_cnt[c0:c1] = fcnt
-                n_tiles[i:j] = nt
-                n_px[i:j] = w * h
-                i = j
-            yield pd.DataFrame(
-                {
-                    "image_key": out_keys,
-                    "minx": out_bbox[:, 0], "miny": out_bbox[:, 1],
-                    "maxx": out_bbox[:, 2], "maxy": out_bbox[:, 3],
-                    "n_tiles": n_tiles, "n_px": n_px,
-                    "sum_v": sum_v, "min_v": min_v, "max_v": max_v,
-                    "focal_sum": focal_sum, "focal_cnt": focal_cnt,
-                }
-            )
+    def _run(cols):
+        keys = cols["image_key"]
+        return {**cols, **_image_stats(cols["w"], cols["h"], keys, _lattice(keys), tile)}
 
     schema = (
         "image_key long, minx double, miny double, maxx double, maxy double, "
         "n_tiles long, n_px long, sum_v long, min_v long, max_v long, "
         "focal_sum long, focal_cnt long"
     )
-    return images.select(
-        "image_key", "w", "h", "minx", "miny", "maxx", "maxy"
-    ).mapInPandas(_run, schema=schema)
-
-
-STAT_COLS = ["n_tiles", "n_px", "sum_v", "min_v", "max_v", "focal_sum", "focal_cnt"]
-
-
-def zonal_rollup_df(img_stats: DataFrame, zindex_b) -> DataFrame:
-    """Map-side spatial match + PARTIAL per-zone aggregation: the
-    image×zone pair list (≈27 pairs/image at sf0.1 — tens of millions of
-    rows) is never materialized or shuffled; each task emits ≤|zones|
-    partial rows and only those shuffle to the final groupBy. This is
-    aggregation pushdown through the spatial join — the shape that keeps
-    the 10^12-image job's shuffle O(tasks × zones), not O(pairs)."""
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zx = zindex_b.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            rects = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64)
-            qi, zi = zx.match(rects, "intersects")
-            if not len(qi):
-                continue
-            m = pd.DataFrame({"zone_id": zx.zone_ids[zi]})
-            for c in STAT_COLS:
-                m[c] = pdf[c].to_numpy()[qi]
-            g = m.groupby("zone_id", sort=False)
-            out = g.agg(
-                n_images=("n_px", "size"),
-                n_tiles=("n_tiles", "sum"),
-                n_px=("n_px", "sum"),
-                sum_v=("sum_v", "sum"),
-                min_v=("min_v", "min"),
-                max_v=("max_v", "max"),
-                focal_sum=("focal_sum", "sum"),
-                focal_cnt=("focal_cnt", "sum"),
-            ).reset_index()
-            yield out
-
-    schema = (
-        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
+    return arrow_map(
+        images.select("image_key", "w", "h", "minx", "miny", "maxx", "maxy"), _run, schema
     )
-    partials = img_stats.mapInPandas(_run, schema=schema)
+
+
+# ------------------------------------------------------------- zonal rollup
+
+PARTIAL_SCHEMA = (
+    "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
+    "min_v long, max_v long, focal_sum long, focal_cnt long"
+)
+
+
+def _zone_partials(zx, rects: np.ndarray, st: dict) -> dict | None:
+    """Map-side spatial match + PARTIAL per-zone aggregation: the
+    image×zone pair list is never materialized or shuffled; each task
+    emits ≤|zones| partial rows and only those shuffle to the final
+    groupBy — aggregation pushdown through the spatial join, the shape
+    that keeps the 10^12-image job's shuffle O(tasks × zones)."""
+    qi, zi = zx.match(rects, "intersects")
+    if not len(qi):
+        return None
+    o = np.argsort(zi, kind="stable")
+    zs, q = zi[o], qi[o]
+    starts = np.flatnonzero(np.r_[True, zs[1:] != zs[:-1]])
+    out = {"zone_id": zx.zone_ids[zs[starts]], "n_images": np.diff(np.r_[starts, len(zs)])}
+    for c in ("n_tiles", "n_px", "sum_v", "focal_sum", "focal_cnt"):
+        out[c] = np.add.reduceat(st[c][q], starts)
+    out["min_v"] = np.minimum.reduceat(st["min_v"][q], starts)
+    out["max_v"] = np.maximum.reduceat(st["max_v"][q], starts)
+    return out
+
+
+def _zone_rollup(partials: DataFrame) -> DataFrame:
+    """Final per-zone aggregate over the map-side partials."""
     return partials.groupBy("zone_id").agg(
         F.sum("n_images").alias("n_images"),
         F.sum("n_tiles").alias("n_tiles"),
@@ -414,77 +380,6 @@ def _derive_footprints(keys: np.ndarray, replicate: int):
     return w, h, bbox
 
 
-def _zone_partials_fused(zindex_b, tile: int, radius: int, replicate: int):
-    """One mapInPandas body = footprint derivation + kernels + per-image
-    rollup + STRtree match + per-zone partial agg. A single JVM↔Python
-    Arrow crossing per task; only ≤|zones| partial rows leave each task."""
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        zx = zindex_b.value
-        # consume the whole partition at once: the per-zone refine loop
-        # then runs once per TASK (not once per Arrow batch), and the
-        # zonal partial has at most |zones| rows per task
-        batches = [p for p in it if len(p)]
-        if not batches:
-            return
-        for pdf in [pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]]:
-            keys_all = pdf["image_key"].to_numpy(np.int64)
-            ws, hs, bbox = _derive_footprints(keys_all, replicate)
-            n = len(keys_all)
-            order = np.lexsort((keys_all, hs, ws))
-            sum_v = np.empty(n, np.int64)
-            min_v = np.empty(n, np.int64)
-            max_v = np.empty(n, np.int64)
-            focal_sum = np.empty(n, np.int64)
-            focal_cnt = np.empty(n, np.int64)
-            n_tiles = np.empty(n, np.int64)
-            n_px = np.empty(n, np.int64)
-            i = 0
-            while i < n:
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < n and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                for c0 in range(i, j, CHUNK):
-                    c1 = min(c0 + CHUNK, j)
-                    s, mn, mx, fsum, fcnt = _image_stats_chunk(
-                        keys_all[order[c0:c1]], w, h, radius
-                    )
-                    sum_v[c0:c1] = s
-                    min_v[c0:c1] = mn
-                    max_v[c0:c1] = mx
-                    focal_sum[c0:c1] = fsum
-                    focal_cnt[c0:c1] = fcnt
-                n_tiles[i:j] = -(-w // tile) * -(-h // tile)
-                n_px[i:j] = w * h
-                i = j
-            rects = bbox[order]
-            qi, zi = zx.match(rects, "intersects")
-            if not len(qi):
-                continue
-            m = pd.DataFrame(
-                {
-                    "zone_id": zx.zone_ids[zi],
-                    "n_tiles": n_tiles[qi], "n_px": n_px[qi],
-                    "sum_v": sum_v[qi], "min_v": min_v[qi], "max_v": max_v[qi],
-                    "focal_sum": focal_sum[qi], "focal_cnt": focal_cnt[qi],
-                }
-            )
-            g = m.groupby("zone_id", sort=False)
-            yield g.agg(
-                n_images=("n_px", "size"),
-                n_tiles=("n_tiles", "sum"),
-                n_px=("n_px", "sum"),
-                sum_v=("sum_v", "sum"),
-                min_v=("min_v", "min"),
-                max_v=("max_v", "max"),
-                focal_sum=("focal_sum", "sum"),
-                focal_cnt=("focal_cnt", "sum"),
-            ).reset_index()
-
-    return _run
-
-
 def north_star(
     spark: SparkSession,
     sf_dir: str,
@@ -494,9 +389,10 @@ def north_star(
 ) -> DataFrame:
     """Full pipeline → per-zone tile statistics. Forcing the result
     executes every stage. Plan shape: scan → explode → [ONE fused map:
-    tiler/kernels/per-image rollup/STRtree match/zonal partials] → one
-    tiny shuffle → final agg. No pair materialization, no pixel shuffle,
-    one Python stage."""
+    footprints/tiler/kernels/per-image rollup/STRtree match/zonal
+    partials, once per task over the whole partition] → one tiny
+    shuffle → final agg. No pair materialization, no pixel shuffle, one
+    Python stage."""
     from rsgislib_spark.operators.spatial_join import ZoneIndex
 
     imgs = images_df(spark, sf_dir, replicate)
@@ -509,22 +405,16 @@ def north_star(
     zindex_b = spark.sparkContext.broadcast(
         ZoneIndex.from_pandas(load_zones_pdf(sf_dir))
     )
-    schema = (
-        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
-    )
-    partials = imgs.select("image_key").mapInPandas(
-        _zone_partials_fused(zindex_b, tile, 1, max(replicate, 1)), schema=schema
-    )
-    return partials.groupBy("zone_id").agg(
-        F.sum("n_images").alias("n_images"),
-        F.sum("n_tiles").alias("n_tiles"),
-        F.sum("n_px").alias("n_px"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.round(F.sum("focal_sum") / F.sum("focal_cnt"), 6).alias("mean_focal"),
-    )
+    replicate = max(replicate, 1)
+
+    def _run(cols):
+        keys = cols["image_key"]
+        ws, hs, bbox = _derive_footprints(keys, replicate)
+        st = _image_stats(ws, hs, keys, _lattice(keys), tile)
+        return _zone_partials(zindex_b.value, bbox, st)
+
+    partials = arrow_map(imgs.select("image_key"), _run, PARTIAL_SCHEMA, whole_partition=True)
+    return _zone_rollup(partials)
 
 
 def north_star_resumable(
@@ -566,148 +456,27 @@ def encode_images_df(
     imgs = images_df(spark, sf_dir, replicate)
     if where is not None:
         # Subset BEFORE the encode stage: a filter applied by the caller
-        # lands above the opaque mapInPandas node and cannot push through
+        # lands above the opaque Python map node and cannot push through
         # it, so the whole table would be encoded only to be discarded.
         imgs = imgs.filter(where)
     if n_partitions is None:
         n_partitions = spark.sparkContext.defaultParallelism * 4
     imgs = imgs.repartition(n_partitions, "image_key")
 
-    def _enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            keys = pdf["image_key"].to_numpy(np.int64)
-            ws = pdf["w"].to_numpy(np.int32)
-            hs = pdf["h"].to_numpy(np.int32)
-            bufs, fmts = [], []
-            order = np.lexsort((keys, hs, ws))
-            out = pdf.iloc[order].reset_index(drop=True)
-            okeys = keys[order]
-            i = 0
-            while i < len(order):
-                w, h = int(ws[order[i]]), int(hs[order[i]])
-                j = i
-                while j < len(order) and ws[order[j]] == w and hs[order[j]] == h:
-                    j += 1
-                for c0 in range(i, j, CHUNK):
-                    grp = okeys[c0 : min(c0 + CHUNK, j)]
-                    grid = lattice_grid(grp, w, h)
-                    for t, kk in enumerate(grp):
-                        fmt = "raw" if kk % 2 == 0 else "png"
-                        bufs.append(codecs.encode_image(grid[t], fmt))
-                        fmts.append(fmt)
-                i = j
-            out["bytes"] = bufs
-            out["fmt"] = fmts
-            yield out[
-                ["image_key", "bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy"]
-            ]
+    def _run(cols):
+        keys = cols["image_key"]
+        fmts = np.where(keys % 2 == 0, "raw", "png").tolist()
+        bufs = [None] * len(keys)
+        for idx, w, h in _shape_chunks(cols["w"], cols["h"], keys):
+            for i, g in zip(idx, lattice_grid(keys[idx], w, h)):
+                bufs[i] = codecs.encode_image(g, fmts[i])
+        return {**cols, "bytes": bufs, "fmt": fmts}
 
     schema = (
         "image_key long, bytes binary, fmt string, w int, h int, "
         "minx double, miny double, maxx double, maxy double"
     )
-    return imgs.mapInPandas(_enc, schema=schema)
-
-
-def _zone_partials_decoded(zindex_b, tile: int, radius: int):
-    """Fused decode → kernels → per-image rollup → STRtree match →
-    per-zone partial agg over BYTES-BEARING rows: the executor reads real
-    pixel payloads exactly as ``RSGISCalcImage::calcImage`` does
-    (src/img/RSGISCalcImage.cpp:149-230 — the reference executor always
-    decodes pixels before the per-pixel callback). Decode is per image
-    (variable-size codec payloads), the stats kernels run on same-shape
-    CHUNK stacks like the synthetic path."""
-    from rsgislib_spark.kernels import codecs
-
-    def _run(it):
-        import pyarrow as pa
-
-        zx = zindex_b.value
-        # Arrow RecordBatches, NOT pandas: converting a binary column to
-        # pandas materializes one Python bytes object per row — measured
-        # 4.4× slower end-to-end than reading the Arrow buffers directly
-        # (22.1 s vs 5.0 s pass-through on the 50k-image bench table).
-        batches = [b for b in it if b.num_rows]
-        if not batches:
-            return
-        ws_l, hs_l, bbox_l, bufs, fmts = [], [], [], [], []
-        for b in batches:
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            ws_l.append(cols["w"].to_numpy(zero_copy_only=False).astype(np.int32))
-            hs_l.append(cols["h"].to_numpy(zero_copy_only=False).astype(np.int32))
-            bbox_l.append(
-                np.stack(
-                    [cols[c].to_numpy(zero_copy_only=False).astype(np.float64)
-                     for c in ("minx", "miny", "maxx", "maxy")], axis=1
-                )
-            )
-            bufs.extend(codecs.arrow_binary_views(cols["bytes"]))
-            fmts.extend(cols["fmt"].to_pylist())
-        ws = np.concatenate(ws_l)
-        hs = np.concatenate(hs_l)
-        bbox = np.concatenate(bbox_l, axis=0)
-        n = len(ws)
-        order = np.lexsort((np.arange(n), hs, ws))
-        sum_v = np.empty(n, np.int64)
-        min_v = np.empty(n, np.int64)
-        max_v = np.empty(n, np.int64)
-        focal_sum = np.empty(n, np.int64)
-        focal_cnt = np.empty(n, np.int64)
-        n_tiles = np.empty(n, np.int64)
-        n_px = np.empty(n, np.int64)
-        i = 0
-        while i < n:
-            w, h = int(ws[order[i]]), int(hs[order[i]])
-            j = i
-            while j < n and ws[order[j]] == w and hs[order[j]] == h:
-                j += 1
-            for c0 in range(i, j, CHUNK):
-                c1 = min(c0 + CHUNK, j)
-                stack = np.empty((c1 - c0, h, w), dtype=np.uint8)
-                for t, oi in enumerate(order[c0:c1]):
-                    stack[t] = codecs.decode_image(bufs[oi], fmts[oi], h, w)
-                s, mn, mx, fsum, fcnt = _stats_from_grid(stack, radius)
-                sum_v[c0:c1] = s
-                min_v[c0:c1] = mn
-                max_v[c0:c1] = mx
-                focal_sum[c0:c1] = fsum
-                focal_cnt[c0:c1] = fcnt
-            n_tiles[i:j] = -(-w // tile) * -(-h // tile)
-            n_px[i:j] = w * h
-            i = j
-        rects = bbox[order]
-        qi, zi = zx.match(rects, "intersects")
-        if not len(qi):
-            return
-        m = pd.DataFrame(
-            {
-                "zone_id": zx.zone_ids[zi],
-                "n_tiles": n_tiles[qi], "n_px": n_px[qi],
-                "sum_v": sum_v[qi], "min_v": min_v[qi], "max_v": max_v[qi],
-                "focal_sum": focal_sum[qi], "focal_cnt": focal_cnt[qi],
-            }
-        )
-        g = m.groupby("zone_id", sort=False)
-        out = g.agg(
-            n_images=("n_px", "size"),
-            n_tiles=("n_tiles", "sum"),
-            n_px=("n_px", "sum"),
-            sum_v=("sum_v", "sum"),
-            min_v=("min_v", "min"),
-            max_v=("max_v", "max"),
-            focal_sum=("focal_sum", "sum"),
-            focal_cnt=("focal_cnt", "sum"),
-        ).reset_index()
-        yield pa.RecordBatch.from_pandas(
-            out.astype(
-                {c: np.int64 for c in out.columns if c != "zone_id"}
-            ),
-            preserve_index=False,
-        )
-
-    return _run
+    return arrow_map(imgs, _run, schema)
 
 
 def north_star_decoded(
@@ -723,11 +492,17 @@ def north_star_decoded(
     → per-zone stats. Identical result to :func:`north_star` because the
     raw/png-class codecs are exact, so it shares the q64 oracle math —
     but the timed path now includes the codec work that dominates a
-    100 TB deployment. Pass ``images_bytes`` (e.g. a parquet scan of a
-    prebuilt bytes table) to exclude encode from the measured window;
-    by default the encode stage feeds the decode stage in-plan (bytes
-    cross the Arrow boundary between the two Python stages — the
-    sandbox stand-in for a storage scan; pixels still never shuffle)."""
+    100 TB deployment. The executor reads real pixel payloads exactly as
+    ``RSGISCalcImage::calcImage`` does (src/img/RSGISCalcImage.cpp:149-230
+    — the reference executor always decodes pixels before the per-pixel
+    callback); decode is per image, the stats kernels run on same-shape
+    CHUNK stacks like the synthetic path. Pass ``images_bytes`` (e.g. a
+    parquet scan of a prebuilt bytes table) to exclude encode from the
+    measured window; by default the encode stage feeds the decode stage
+    in-plan (bytes cross the Arrow boundary between the two Python
+    stages — the stand-in for a storage scan; pixels still never
+    shuffle)."""
+    from rsgislib_spark.kernels import codecs
     from rsgislib_spark.operators.spatial_join import ZoneIndex
 
     if images_bytes is None:
@@ -735,19 +510,20 @@ def north_star_decoded(
     zindex_b = spark.sparkContext.broadcast(
         ZoneIndex.from_pandas(load_zones_pdf(sf_dir))
     )
-    schema = (
-        "zone_id long, n_images long, n_tiles long, n_px long, sum_v long, "
-        "min_v long, max_v long, focal_sum long, focal_cnt long"
-    )
-    partials = images_bytes.select(
-        "bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy"
-    ).mapInArrow(_zone_partials_decoded(zindex_b, tile, 1), schema=schema)
-    return partials.groupBy("zone_id").agg(
-        F.sum("n_images").alias("n_images"),
-        F.sum("n_tiles").alias("n_tiles"),
-        F.sum("n_px").alias("n_px"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.round(F.sum("focal_sum") / F.sum("focal_cnt"), 6).alias("mean_focal"),
-    )
+
+    def _run(cols):
+        views, fmts = cols["bytes"], cols["fmt"]
+
+        def decoded(idx, w, h):
+            stack = np.empty((len(idx), h, w), dtype=np.uint8)
+            for t, i in enumerate(idx):
+                stack[t] = codecs.decode_image(views[i], fmts[i], h, w)
+            return stack
+
+        ws, hs = cols["w"], cols["h"]
+        st = _image_stats(ws, hs, np.arange(len(ws)), decoded, tile)
+        bbox = np.stack([cols[c] for c in ("minx", "miny", "maxx", "maxy")], axis=1)
+        return _zone_partials(zindex_b.value, bbox.astype(np.float64), st)
+
+    src = images_bytes.select("bytes", "fmt", "w", "h", "minx", "miny", "maxx", "maxy")
+    return _zone_rollup(arrow_map(src, _run, PARTIAL_SCHEMA, whole_partition=True))

@@ -2704,77 +2704,60 @@ def q60_image_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally asserted in tests/test_operators.py. Data is the
     deterministic seeded generator (datagen) — no external input.
 
-    Payloads cross the boundary via mapInArrow + arrow_binary_views and
+    Payloads cross the boundary via arrow_map (zero-copy views) and
     lossy decode (both the stored payload and the re-encode roundtrip)
     batches through decode_dct_batch — the repo's Arrow-boundary rule;
     only the re-ENCODE is per-image (each image is an independent
     vectorized DCT+zlib stream; there is no shared work to batch)."""
     from rsgislib_spark import datagen
     from rsgislib_spark.kernels import codecs
+    from rsgislib_spark.kernels.arrowmap import arrow_map
 
     pdf = datagen.gen_images(150, seed=42)
     sdf = spark.createDataFrame(
         pdf[["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]]
     ).repartition(8)
 
-    def _proc(it):
-        import pyarrow as pa
-
+    def _proc(cols):
         from rsgislib_spark.kernels.phash import phash64
 
-        for b in it:
-            if not b.num_rows:
-                continue
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            hs = cols["h"].to_numpy(zero_copy_only=False)
-            ws = cols["w"].to_numpy(zero_copy_only=False)
-            fmts = cols["fmt"].to_pylist()
-            phashes = cols["phash"].to_numpy(zero_copy_only=False)
-            views = codecs.arrow_binary_views(cols["bytes"])
-            jpg_idx = [
-                k for k in range(b.num_rows)
-                if fmts[k] == "jpg" and codecs.is_rsdc(views[k])
-            ]
-            jpg_dec = dict(
-                zip(jpg_idx, codecs.decode_dct_batch([views[k] for k in jpg_idx]))
+        views, fmts, hs, ws, phashes = (cols[c] for c in ("bytes", "fmt", "h", "w", "phash"))
+        n_rows = len(views)
+        jpg_idx = [
+            k for k in range(n_rows)
+            if fmts[k] == "jpg" and codecs.is_rsdc(views[k])
+        ]
+        jpg_dec = dict(
+            zip(jpg_idx, codecs.decode_dct_batch([views[k] for k in jpg_idx]))
+        )
+        imgs, re_bufs = [], []
+        for k in range(n_rows):
+            img = jpg_dec.get(k)
+            if img is None:
+                img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
+            imgs.append(img)
+            re_bufs.append(codecs.encode_image(img, fmts[k]))
+        jpg_rt = dict(
+            zip(jpg_idx, codecs.decode_dct_batch([re_bufs[k] for k in jpg_idx]))
+        )
+        out = {"fmt": fmts, "px_mean": [], "px_std": [], "phash_ok": [], "psnr_ok": []}
+        for k in range(n_rows):
+            img = imgs[k]
+            rt = jpg_rt.get(k)
+            if rt is None:
+                rt = codecs.decode_image(re_bufs[k], fmts[k], int(hs[k]), int(ws[k]))
+            p_db = codecs.psnr(img.astype(np.float64), rt.astype(np.float64))
+            out["px_mean"].append(float(img.mean()))
+            out["px_std"].append(float(img.std()))
+            out["phash_ok"].append(
+                int(phash64(img)) == int(phashes[k]) if fmts[k] != "jpg" else True
             )
-            imgs, re_bufs = [], []
-            for k in range(b.num_rows):
-                img = jpg_dec.get(k)
-                if img is None:
-                    img = codecs.decode_image(views[k], fmts[k], int(hs[k]), int(ws[k]))
-                imgs.append(img)
-                re_bufs.append(codecs.encode_image(img, fmts[k]))
-            jpg_rt = dict(
-                zip(jpg_idx, codecs.decode_dct_batch([re_bufs[k] for k in jpg_idx]))
-            )
-            out = {"fmt": [], "px_mean": [], "px_std": [], "phash_ok": [], "psnr_ok": []}
-            for k in range(b.num_rows):
-                img = imgs[k]
-                rt = jpg_rt.get(k)
-                if rt is None:
-                    rt = codecs.decode_image(re_bufs[k], fmts[k], int(hs[k]), int(ws[k]))
-                p_db = codecs.psnr(img.astype(np.float64), rt.astype(np.float64))
-                out["fmt"].append(fmts[k])
-                out["px_mean"].append(float(img.mean()))
-                out["px_std"].append(float(img.std()))
-                out["phash_ok"].append(
-                    int(phash64(img)) == int(phashes[k]) if fmts[k] != "jpg" else True
-                )
-                out["psnr_ok"].append(bool(p_db >= 40.0))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["fmt"], pa.string()),
-                    pa.array(out["px_mean"], pa.float64()),
-                    pa.array(out["px_std"], pa.float64()),
-                    pa.array(out["phash_ok"], pa.bool_()),
-                    pa.array(out["psnr_ok"], pa.bool_()),
-                ],
-                names=["fmt", "px_mean", "px_std", "phash_ok", "psnr_ok"],
-            )
+            out["psnr_ok"].append(bool(p_db >= 40.0))
+        return out
 
-    stats = sdf.select("bytes", "w", "h", "fmt", "phash").mapInArrow(
-        _proc, schema="fmt string, px_mean double, px_std double, phash_ok boolean, psnr_ok boolean"
+    stats = arrow_map(
+        sdf.select("bytes", "w", "h", "fmt", "phash"), _proc,
+        "fmt string, px_mean double, px_std double, phash_ok boolean, psnr_ok boolean",
     )
     return stats.groupBy("fmt").agg(
         F.count("*").alias("n_images"),

@@ -137,6 +137,32 @@ def test_video_frame_sampling(spark):
     assert np.array_equal(got, frames[5])
 
 
+def test_video_frames_split_at_binary_batch_ceiling(spark, monkeypatch):
+    """Sampled frames whose payload bytes would pass the per-batch binary
+    ceiling (int32 offsets: 2 GiB in production, a few frames here) leave
+    in several record batches — same rows, same payloads, no wrap."""
+    from rsgislib_spark.kernels import arrowmap
+    from rsgislib_spark.operators.multimodal import sample_video_frames
+
+    h, w = 6, 5
+    clips = pd.DataFrame({
+        "clip_id": [f"v{i}" for i in range(4)],
+        "bytes": [((np.arange((10 + i) * h * w) * (i + 3)) % 251).astype(np.uint8).tobytes()
+                  for i in range(4)],
+        "fmt": ["rawframes"] * 4, "h": [h] * 4, "w": [w] * 4,
+    })
+    df = spark.createDataFrame(clips).coalesce(1)
+
+    def sampled():
+        return sorted((r["clip_id"], r["frame_no"], r["h"], r["w"], bytes(r["frame"]))
+                      for r in sample_video_frames(df, every_k=2).collect())
+
+    whole = sampled()
+    assert len(whole) == 5 + 6 + 6 + 7
+    monkeypatch.setattr(arrowmap, "MAX_BATCH_BINARY_BYTES", 3 * h * w)
+    assert sampled() == whole
+
+
 def test_audio_external_backend_seam(monkeypatch):
     from rsgislib_spark.operators import multimodal as mm
 

@@ -239,3 +239,80 @@ def test_pil_backend_real_jfif_roundtrip():
     buf = be.encode(base, "jfif")
     out = codecs.decode_image(buf, "jpg", 64, 64)
     assert codecs.psnr(out, base) >= 30.0
+
+
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    import struct
+    import zlib
+
+    return struct.pack(">I", len(data)) + tag + data + struct.pack(">I", zlib.crc32(tag + data))
+
+
+def _png(ihdr: bytes, idat: bytes) -> bytes:
+    return (codecs._PNG_SIG + _png_chunk(b"IHDR", ihdr) + _png_chunk(b"IDAT", idat)
+            + _png_chunk(b"IEND", b""))
+
+
+class _FakePngBackend:
+    """Serves every PNG payload with a fixed array."""
+
+    name = "fake-png"
+    out = np.full((2, 3), 7, dtype=np.uint8)
+
+    def can_decode(self, fmt, buf):
+        return fmt == "png"
+
+    def decode(self, buf, fmt):
+        return self.out
+
+
+def test_png_fallback_on_zlib_and_struct_errors(monkeypatch):
+    """A PNG the in-house decoder rejects with zlib.error (corrupt IDAT)
+    or struct.error (truncated chunk header) routes to an external
+    backend that serves it; with no backend the original error stands."""
+    import struct
+    import zlib
+
+    import pytest
+
+    corrupt = _png(struct.pack(">IIBBBBB", 3, 2, 8, 0, 0, 0, 0), b"not deflate data")
+    truncated = codecs._PNG_SIG + b"\x00\x00"
+    monkeypatch.setattr(codecs, "_EXTERNAL_BACKENDS", [_FakePngBackend()])
+    for buf in (corrupt, truncated):
+        assert np.array_equal(codecs.decode_image(buf, "png", 2, 3), _FakePngBackend.out)
+    monkeypatch.setattr(codecs, "_EXTERNAL_BACKENDS", [])
+    with pytest.raises(zlib.error):
+        codecs.decode_image(corrupt, "png", 2, 3)
+    with pytest.raises(struct.error):
+        codecs.decode_image(truncated, "png", 2, 3)
+
+
+class _FakePILImage:
+    """Just enough of a PIL image: a mode, its bands, and convert()."""
+
+    bands = {"P": ("P",), "PA": ("P", "A"), "L": ("L",), "RGB": ("R", "G", "B")}
+
+    def __init__(self, mode):
+        self.mode = mode
+
+    def getbands(self):
+        return self.bands[self.mode]
+
+    def convert(self, mode):
+        return _FakePILImage(mode)
+
+    def __array__(self, dtype=None, copy=None):
+        return np.zeros((2, 3, 3) if self.mode == "RGB" else (2, 3), dtype=np.uint8)
+
+
+def test_pil_backend_palette_decodes_to_rgb(monkeypatch):
+    """Palette ("P") and palette+alpha ("PA") images decode to RGB, not
+    grey, through the Pillow backend (Pillow itself faked)."""
+    import struct
+
+    palette_png = _png(struct.pack(">IIBBBBB", 3, 2, 8, 3, 0, 0, 0), b"")
+    be = codecs._PILBackend.__new__(codecs._PILBackend)
+    monkeypatch.setattr(codecs, "_EXTERNAL_BACKENDS", [be])
+    for mode in ("P", "PA"):
+        be._Image = type("FakeImageModule", (), {"open": staticmethod(lambda f, m=mode: _FakePILImage(m))})
+        assert codecs.decode_image(palette_png, "png", 2, 3).shape == (2, 3, 3), mode

@@ -104,3 +104,19 @@ def test_knn_fences(spark, monkeypatch):
         knn.closest_point_join(pts, pts).count()
     with pytest.raises(ValueError, match="radius_count_bucketed"):
         knn.radius_count(pts, 5.0).count()
+
+
+def test_pipeline_zone_fence(tmp_path, monkeypatch):
+    """load_zones_pdf counts the supplier rows from the parquet footer
+    (pandas/pyarrow only — no Spark session needed) and raises before
+    building any polygon when the zone side is too large to broadcast."""
+    from rsgislib_spark import pipeline
+
+    pd.DataFrame({"s_suppkey": np.arange(1, 11, dtype=np.int64)}).to_parquet(
+        tmp_path / "supplier.parquet"
+    )
+    monkeypatch.setattr(pipeline, "MAX_BROADCAST_ZONES", 9)
+    with pytest.raises(ValueError, match="spatial_join_cells"):
+        pipeline.load_zones_pdf(str(tmp_path))
+    monkeypatch.setattr(pipeline, "MAX_BROADCAST_ZONES", 10)
+    assert len(pipeline.load_zones_pdf(str(tmp_path))) == 10

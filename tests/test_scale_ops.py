@@ -120,6 +120,29 @@ class TestTableSinkSeam:
         assert not (tmp_path / "x").exists()
 
 
+    def test_write_table_append_without_iceberg_raises(self, spark, skewed_df, tmp_path):
+        # the parquet fallback replaces/resumes buckets: an append there
+        # would silently drop the caller's intent
+        with pytest.raises(ValueError, match="append"):
+            manifest.write_table(skewed_df, str(tmp_path / "x"), "row_id",
+                                 table="cat.db.tiles", mode="append")
+        assert not (tmp_path / "x").exists()
+
+    def test_iceberg_probe_reads_runtime_conf(self, spark, monkeypatch):
+        from types import SimpleNamespace
+
+        # the catalog class "loads" (no Iceberg jars here), so the probe's
+        # answer depends only on which confs it reads
+        lang = SimpleNamespace(Class=SimpleNamespace(forName=lambda name: name))
+        monkeypatch.setattr(spark, "_jvm", SimpleNamespace(java=SimpleNamespace(lang=lang)))
+        assert manifest.iceberg_available(spark) is False
+        spark.conf.set("spark.sql.catalog.rt_ice", "org.apache.iceberg.spark.SparkCatalog")
+        try:
+            assert manifest.iceberg_available(spark) is True
+        finally:
+            spark.conf.unset("spark.sql.catalog.rt_ice")
+
+
 class TestIncrementalStreaming:
     def test_availablenow_resume(self, spark, tmp_path):
         from rsgislib_spark.streaming.incremental import incremental_event_counts
