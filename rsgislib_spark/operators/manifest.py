@@ -1,4 +1,4 @@
-"""Checkpoint-resumable writes with per-partition lineage manifests.
+"""Checkpoint-resumable writes with per-bucket lineage manifests.
 
 North-rule requirement the reference lacks entirely (its tiled pipelines
 delete temp dirs and restart from zero — ``segmentation/tiledclump.py:
@@ -6,13 +6,32 @@ delete temp dirs and restart from zero — ``segmentation/tiledclump.py:
 finished partitions.
 
 Design (Iceberg-snapshot style, parquet-native so it runs in this
-container): output is bucketed by a deterministic hash of a key column;
-each bucket is written as its own job to ``out_dir/bucket=<b>/``; after a
-bucket lands, a LINEAGE row ``(stage, bucket, n_rows, key_hash_sum)`` is
-appended to ``out_dir/_manifest/``. On restart, completed buckets are
-read from the manifest and skipped (driver-side anti-set). The lineage
-hash (bit_xor of xxhash64 of the key, order-independent) lets a verifier
-re-check any bucket without re-running the producer.
+container): output is bucketed by a deterministic hash of a key column
+into ``out_dir/bucket=<b>/``, and each committed bucket has one LINEAGE
+row ``(n_rows, key_hash_sum, bucket, stage, n_buckets)`` in its own
+parquet file under ``out_dir/_manifest/``.
+
+- One producer pass per call: a single ``partitionBy("bucket")`` job
+  stages every pending bucket under ``out_dir/_staging/``. A
+  ``pyspark.sql.Observation`` on the same pass computes each bucket's
+  lineage from the rows handed to the writer, not from the written
+  files, so :func:`verify_against_manifest` stays an independent check.
+- Per-bucket commit on the driver, in ascending bucket order: the staged
+  directory replaces ``out_dir/bucket=<b>`` (``os.rename``), then the
+  bucket's lineage file is written under a dot-prefixed temp name and
+  ``os.replace``-d into place. A bucket is committed exactly when its
+  lineage file exists.
+- Restart: the driver reads the ``bucket`` column of the lineage files
+  with pyarrow (no Spark job) and writes only the missing buckets.
+
+Durability granularity: a kill *between* calls resumes only the missing
+buckets. A kill *inside* a call loses that call's uncommitted buckets;
+re-running them costs one producer pass. Iceberg commits the same way:
+one write job, then a commit written by the driver.
+
+The lineage hash (bit_xor of xxhash64 of the key, order-independent and
+overflow-free) lets a verifier re-check any bucket against its files
+without re-running the producer.
 
 Determinism: bucket = pmod(xxhash64(key), n_buckets) — stable across
 retries, executors, and salting (same hash family as operators.salting).
@@ -21,24 +40,55 @@ retries, executors, and salting (same hash family as operators.salting).
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 MANIFEST_SUBDIR = "_manifest"
+STAGING_SUBDIR = "_staging"
+LINEAGE_SCHEMA = pa.schema([
+    ("n_rows", pa.int64()),
+    ("key_hash_sum", pa.int64()),
+    ("bucket", pa.int32()),
+    ("stage", pa.string()),
+    ("n_buckets", pa.int32()),
+])
 
 
 def bucket_col(id_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set:
+def _lineage_column(out_dir: str, name: str) -> list:
+    """One column of every committed lineage file, read on the driver.
+    Files written before the column existed contribute nothing."""
     mdir = os.path.join(out_dir, MANIFEST_SUBDIR)
-    if not os.path.exists(mdir) or not any(
-        f.endswith(".parquet") for f in os.listdir(mdir)
-    ):
-        return set()
-    pdf = spark.read.parquet(mdir).select("bucket").distinct().toPandas()
-    return set(int(b) for b in pdf["bucket"])
+    if not os.path.isdir(mdir):
+        return []
+    vals = []
+    for f in sorted(os.listdir(mdir)):
+        if f.startswith((".", "_")) or not f.endswith(".parquet"):
+            continue
+        with pq.ParquetFile(os.path.join(mdir, f)) as pf:
+            if name in pf.schema_arrow.names:
+                vals += pf.read(columns=[name]).column(name).to_pylist()
+    return vals
+
+
+def completed_buckets(spark: SparkSession, out_dir: str) -> set:
+    """Buckets with a committed lineage row (pyarrow, no Spark job)."""
+    return {int(b) for b in _lineage_column(out_dir, "bucket")}
+
+
+def _commit_lineage(mdir: str, row: dict) -> None:
+    """Publish one bucket's lineage row atomically: readers skip
+    dot-prefixed names, so the file appears only at ``os.replace``."""
+    name = f"bucket-{row['bucket']:05d}.parquet"
+    tmp = os.path.join(mdir, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist([row], schema=LINEAGE_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(mdir, name))
 
 
 def resumable_write(
@@ -48,35 +98,74 @@ def resumable_write(
     n_buckets: int = 16,
     stage: str = "tiles",
 ) -> dict:
-    """Write ``df`` to ``out_dir`` bucket-by-bucket with manifest commits.
+    """Write ``df`` to ``out_dir/bucket=<b>/`` with one lineage commit per
+    bucket, running the producer once.
 
-    Returns {"written": [...], "skipped": [...]}. Restart-safe: re-invoking
-    after a kill continues from the first un-manifested bucket. The input
-    should be cheap to re-derive or cached; at scale the source table is
-    partitioned on the same bucket expression so each pass prunes to one
-    bucket's files (Iceberg partition transform ``bucket(N, id)``).
+    Buckets already in the manifest are skipped; the pending ones are
+    written by one ``partitionBy`` job to ``out_dir/_staging`` and
+    committed on the driver in ascending order (data rename, then
+    lineage file). A kill between calls resumes only the missing
+    buckets; a kill inside a call loses its uncommitted buckets, which
+    the next call re-writes in one producer pass. Every committed bucket
+    holds at least a schema-only file, so empty buckets stay readable.
+
+    Returns {"written": [...], "skipped": [...]}, both ascending. Raises
+    ValueError if ``out_dir``'s manifest was written with another
+    ``n_buckets``: its finished buckets would hold rows of other buckets.
     """
-    spark = df.sparkSession
-    done = completed_buckets(spark, out_dir)
-    b = df.withColumn("_bucket", bucket_col(id_col, n_buckets))
-    written, skipped = [], []
+    recorded = set(_lineage_column(out_dir, "n_buckets")) - {n_buckets}
+    if recorded:
+        raise ValueError(
+            f"{out_dir} was written with n_buckets={sorted(recorded)}, not "
+            f"{n_buckets}; resume with the same n_buckets or use a new out_dir."
+        )
+    done = completed_buckets(df.sparkSession, out_dir)
+    pending = [k for k in range(n_buckets) if k not in done]
+    skipped = [k for k in range(n_buckets) if k in done]
+    if not pending:
+        return {"written": [], "skipped": skipped}
+
+    # each pending bucket's lineage, observed on the write's own pass
+    obs = Observation()
+    metrics = []
+    for k in pending:
+        in_k = F.col("bucket") == k
+        metrics += [
+            F.count(F.when(in_k, 1)).alias(f"n_rows_{k}"),
+            F.coalesce(F.bit_xor(F.when(in_k, F.xxhash64(id_col))), F.lit(0))
+            .alias(f"key_hash_sum_{k}"),
+        ]
+    staging = os.path.join(out_dir, STAGING_SUBDIR)
+    shutil.rmtree(staging, ignore_errors=True)  # left by a killed call
+    staged = df.withColumn("bucket", bucket_col(id_col, n_buckets)).observe(obs, *metrics)
+    if done:
+        # above the observe, which Catalyst pushes no filter through: a
+        # filter below it would evaluate Python producer columns twice
+        staged = staged.filter(F.col("bucket").isin(pending))
+    staged.write.partitionBy("bucket").parquet(staging)
+    lineage = obs.get
+
+    # a partitioned write makes no directory for an empty bucket: give it
+    # a schema-only file (limit(0) runs no producer pass)
+    empty = os.path.join(staging, "_empty")
+    if any(lineage[f"n_rows_{k}"] == 0 for k in pending):
+        df.limit(0).write.parquet(empty)
     mdir = os.path.join(out_dir, MANIFEST_SUBDIR)
-    for bk in range(n_buckets):
-        if bk in done:
-            skipped.append(bk)
-            continue
-        part = b.filter(F.col("_bucket") == bk).drop("_bucket")
-        part.write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={bk}"))
-        # lineage row: counts + order-independent key hash (verifiable)
-        # bit_xor: order-independent and overflow-free (ANSI-safe), unlike
-        # a bigint SUM of full-range hashes
-        lin = part.agg(
-            F.count("*").alias("n_rows"),
-            F.coalesce(F.expr(f"bit_xor(xxhash64({id_col}))"), F.lit(0)).alias("key_hash_sum"),
-        ).withColumn("bucket", F.lit(bk)).withColumn("stage", F.lit(stage))
-        lin.coalesce(1).write.mode("append").parquet(mdir)
-        written.append(bk)
-    return {"written": written, "skipped": skipped}
+    os.makedirs(mdir, exist_ok=True)
+    for k in pending:
+        src = os.path.join(staging, f"bucket={k}")
+        if lineage[f"n_rows_{k}"] == 0:
+            shutil.copytree(empty, src, ignore=shutil.ignore_patterns("_*", "._*"))
+        dst = os.path.join(out_dir, f"bucket={k}")
+        shutil.rmtree(dst, ignore_errors=True)  # uncommitted data of a killed call
+        os.rename(src, dst)
+        _commit_lineage(mdir, {
+            "n_rows": lineage[f"n_rows_{k}"],
+            "key_hash_sum": lineage[f"key_hash_sum_{k}"],
+            "bucket": k, "stage": stage, "n_buckets": n_buckets,
+        })
+    shutil.rmtree(staging)
+    return {"written": pending, "skipped": skipped}
 
 
 # ----------------------------------------------- pluggable table-format sink
@@ -131,7 +220,7 @@ def write_table(
 
     With ``table`` set and an Iceberg catalog configured, writes through
     ``df.writeTo(table)`` (snapshot isolation, hidden partitioning —
-    ``bucket(N, id)`` replaces the manual bucket loop). Otherwise falls
+    ``bucket(N, id)`` replaces the manual bucket column). Otherwise falls
     back to :func:`resumable_write`'s parquet + lineage-manifest layout,
     which provides the same restart-without-recompute guarantee with no
     extra jars. That layout replaces or resumes buckets and cannot

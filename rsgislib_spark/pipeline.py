@@ -424,10 +424,13 @@ def north_star_resumable(
     n_buckets: int = 8,
     replicate: int = 1,
 ) -> dict:
-    """North-star with checkpoint-resumable output (north rule): per-zone
-    results land bucket-by-bucket with manifest commits + lineage rows —
-    a killed job re-invoked with the same ``out_dir`` skips every bucket
-    whose manifest row exists and recomputes nothing else."""
+    """North-star with checkpoint-resumable output (north rule): one
+    producer pass writes the per-zone results of every pending bucket,
+    then each bucket commits in ascending order with its lineage row
+    (see :func:`operators.manifest.resumable_write`). Re-invoked with the
+    same ``out_dir`` after a kill between calls, it skips every bucket
+    whose lineage row exists and writes the rest in one more pass; a
+    kill inside a call loses only that call's uncommitted buckets."""
     from rsgislib_spark.operators.manifest import resumable_write
 
     result = north_star(spark, sf_dir, replicate=replicate)

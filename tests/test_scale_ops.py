@@ -89,6 +89,103 @@ class TestManifest:
         assert not v[v.bucket == 2].ok.iloc[0]
         assert v[v.bucket != 2].ok.all()
 
+    def test_resume_with_other_n_buckets_raises(self, spark, tmp_path):
+        # the finished buckets of a 4-bucket write hold rows that an 8-bucket
+        # layout puts elsewhere: skipping them would duplicate rows
+        out = str(tmp_path / "nb")
+        df = spark.range(200).withColumnRenamed("id", "row_id")
+        manifest.resumable_write(df, out, "row_id", n_buckets=4)
+        with pytest.raises(ValueError, match="n_buckets"):
+            manifest.resumable_write(df, out, "row_id", n_buckets=8)
+        assert sorted(os.listdir(out)) == ["_manifest"] + [f"bucket={b}" for b in range(4)]
+        assert manifest.completed_buckets(spark, out) == {0, 1, 2, 3}
+
+    @pytest.mark.parametrize("n_rows,n_buckets", [(0, 4), (2, 6)])
+    def test_empty_buckets_stay_readable(self, spark, tmp_path, n_rows, n_buckets):
+        out = str(tmp_path / "empty")
+        df = spark.range(2).withColumnRenamed("id", "row_id").limit(n_rows)
+        r = manifest.resumable_write(df, out, "row_id", n_buckets=n_buckets)
+        assert r["written"] == list(range(n_buckets))
+        v = manifest.verify_against_manifest(spark, out, "row_id").toPandas()
+        assert v.ok.all() and sorted(v.bucket) == list(range(n_buckets))
+        assert int(v.n_rows.sum()) == n_rows and (v.n_rows == 0).any()
+
+    def test_kill_mid_commit_rewrites_only_uncommitted(
+        self, spark, skewed_df, tmp_path, monkeypatch
+    ):
+        ref, out = str(tmp_path / "ref"), str(tmp_path / "killed")
+        manifest.resumable_write(skewed_df, ref, "row_id", n_buckets=4)
+        commit, calls = manifest._commit_lineage, []
+
+        def dying(mdir, row):
+            if len(calls) == 2:
+                raise RuntimeError("killed")
+            calls.append(row["bucket"])
+            commit(mdir, row)
+
+        monkeypatch.setattr(manifest, "_commit_lineage", dying)
+        with pytest.raises(RuntimeError, match="killed"):
+            manifest.resumable_write(skewed_df, out, "row_id", n_buckets=4)
+        monkeypatch.undo()
+        assert manifest.completed_buckets(spark, out) == {0, 1}
+
+        r = manifest.resumable_write(skewed_df, out, "row_id", n_buckets=4)
+        assert r == {"written": [2, 3], "skipped": [0, 1]}
+        assert not os.path.exists(os.path.join(out, manifest.STAGING_SUBDIR))
+
+        def rows(d):
+            return sorted(map(tuple, spark.read.parquet(d).collect()))
+
+        def lineage(d):
+            return sorted(map(tuple, manifest.read_manifest(spark, d)
+                              .select("bucket", "n_rows", "key_hash_sum", "stage").collect()))
+
+        assert rows(out) == rows(ref)
+        assert lineage(out) == lineage(ref)
+        # each lineage row equals an independent aggregate of the input
+        indep = skewed_df.groupBy(manifest.bucket_col("row_id", 4).alias("bucket")).agg(
+            F.count("*"), F.bit_xor(F.xxhash64("row_id")))
+        assert [t[:3] for t in lineage(out)] == sorted(map(tuple, indep.collect()))
+
+    @pytest.mark.parametrize("n_buckets", [4, 16])
+    def test_one_job_per_write(self, spark, skewed_df, tmp_path, n_buckets):
+        # guards against per-bucket producer passes coming back
+        sc, out = spark.sparkContext, str(tmp_path / f"jobs{n_buckets}")
+
+        def jobs(group):
+            sc.setJobGroup(group, group)
+            try:
+                manifest.resumable_write(skewed_df, out, "row_id", n_buckets=n_buckets)
+            finally:
+                sc._jsc.clearJobGroup()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        assert jobs(f"manifest-write-{n_buckets}") == 1
+        assert jobs(f"manifest-resume-{n_buckets}") == 0
+
+    def test_producer_sees_each_row_once_per_call(self, spark, skewed_df, tmp_path):
+        out = str(tmp_path / "once")
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("long")
+        def seen(x):
+            acc.add(1)
+            return x
+
+        # the UDF produces the key, so every bucket filter depends on it: a
+        # second producer pass or a re-evaluating filter shows as extra calls
+        df = skewed_df.withColumn("row_id", seen("row_id"))
+        manifest.resumable_write(df, out, "row_id", n_buckets=4)
+        assert acc.value == 5000
+        mdir = os.path.join(out, manifest.MANIFEST_SUBDIR)
+        for f in os.listdir(mdir):
+            if f.endswith(".parquet") and pd.read_parquet(os.path.join(mdir, f)).bucket.iloc[0] >= 2:
+                os.remove(os.path.join(mdir, f))
+        r = manifest.resumable_write(df, out, "row_id", n_buckets=4)
+        assert r["written"] == [2, 3] and acc.value == 10000
+        manifest.resumable_write(df, out, "row_id", n_buckets=4)
+        assert acc.value == 10000
+
 
 class TestTableSinkSeam:
     def test_iceberg_unavailable_in_sandbox(self, spark):
