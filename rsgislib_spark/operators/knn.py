@@ -15,17 +15,19 @@
    raises on ties; we break ties deterministically by smallest train id
    (documented deviation, SURVEY §2.3).
 
- - :func:`knn_points_bucketed` — the SCALE path (the north rule's "kNN
-   neighbor lookup over cell-bucketed candidates"): both sides bucketed
-   to grid cells, candidates = query's k-ring of cells (equi-join, no
-   broadcast of the point table), exact refine + ``row_number() <= k``.
-   A ring-doubling escalation loop guarantees exactness: a query is
-   resolved only when its kth-neighbour distance is within the ring's
-   coverage guarantee (any point outside ring R is at distance
-   > R·cell), so bucketed == brute-force always.
+ - :func:`knn_features_bucketed` — the SCALE path (the north rule's "kNN
+   neighbor lookup over cell-bucketed candidates"), in any number of
+   dimensions: both sides bucketed to grid cells, candidates = query's
+   ring of cells (equi-join, no broadcast of the point table), exact
+   refine + ``row_number() <= k``. A ring-escalation loop guarantees
+   exactness: a query is resolved only when its kth-neighbour distance
+   is within the ring's coverage guarantee (any point outside ring R is
+   at distance > R·cell), so bucketed == brute-force always.
+   :func:`knn_points_bucketed`, the spatial 2-D path, is its d=2 case.
 
- - :func:`radius_count_bucketed` — radius count on the same cell join
-   (cell ≥ r ⇒ ring-1 covers the disk), replacing the O(N²) theta-join.
+ - :func:`radius_count_bucketed` — radius count on the same cell key and
+   ring explode (cell ≥ r ⇒ ring-1 covers the disk), replacing the
+   O(N²) theta-join.
 
 Physical shape: ``knn_apply``/``closest_point_join``/``radius_count``
 broadcast the training/match side — the documented FAST PATH when that
@@ -54,25 +56,6 @@ MAX_BROADCAST_TRAIN = 5_000_000
 GRID_DIM = 1 << 21
 
 
-def _ring_offsets_expr(ring: int):
-    """(2·ring+1)² cell offsets as an explodable Catalyst expression —
-    the k-ring expansion stays JVM-side (no UDF, no driver loop over
-    offsets)."""
-    return F.expr(
-        f"explode(flatten(transform(sequence({-ring}, {ring}), "
-        f"dx -> transform(sequence({-ring}, {ring}), "
-        f"dy -> named_struct('dx', dx, 'dy', dy)))))"
-    )
-
-
-def _with_cell_key(df: DataFrame, cell: float, x: str, y: str, out: str) -> DataFrame:
-    return df.withColumn(
-        out,
-        F.floor(F.col(x) / F.lit(cell)).cast("long") * F.lit(GRID_DIM)
-        + F.floor(F.col(y) / F.lit(cell)).cast("long"),
-    )
-
-
 def _union_and_release(outs: list, persisted: list) -> DataFrame:
     """Union the per-round outputs; when the escalation loop cached
     intermediates, materialize the union once (localCheckpoint — the
@@ -89,6 +72,63 @@ def _union_and_release(outs: list, persisted: list) -> DataFrame:
     return out
 
 
+def _prefixed(df: DataFrame, id_col: str, id_alias: str, prefix: str, cols) -> DataFrame:
+    """``id_col`` as ``id_alias`` plus ``cols`` cast to double and renamed
+    ``{prefix}0..`` — the column layout :func:`_cell_key` and :func:`_d2`
+    read."""
+    return df.select(
+        F.col(id_col).alias(id_alias),
+        *[F.col(c).cast("double").alias(f"{prefix}{j}") for j, c in enumerate(cols)],
+    )
+
+
+def _d2(d: int) -> F.Column:
+    """Squared euclidean distance between ``q0..`` and ``t0..``."""
+    d2 = F.lit(0.0)
+    for j in range(d):
+        diff = F.col(f"q{j}") - F.col(f"t{j}")
+        d2 = d2 + diff * diff
+    return d2
+
+
+def _cell_key(prefix: str, d: int, cell: float, offsets: bool = False) -> F.Column:
+    """Grid-cell key of the d feature columns ``{prefix}0..{prefix}{d-1}``,
+    each index shifted by its ring offset column ``_o{j}`` when
+    ``offsets``. d ≤ 3 packs the per-dim indices into ONE long (radix
+    GRID_DIM — cheapest shuffle key; indices must fit 21 bits); d ≥ 4
+    uses a STRUCT of per-dim longs (Catalyst joins on struct equality)."""
+
+    def digit(j):
+        idx = F.floor(F.col(f"{prefix}{j}") / F.lit(cell)).cast("long")
+        if offsets:
+            idx = idx + F.col(f"_o{j}")
+        return idx
+
+    if d <= 3:
+        # radix-packed d-digit key; digits shifted by half the radix
+        # so negative feature indices stay injective (signed digits
+        # with magnitude near GRID_DIM/2 would otherwise collide
+        # across adjacent high digits)
+        kcol = F.lit(0).cast("long")
+        for j in range(d):
+            kcol = kcol * F.lit(GRID_DIM) + digit(j) + F.lit(GRID_DIM // 2)
+        return kcol
+    # d ≥ 4: struct key — no packing budget, joins on struct equality
+    return F.struct(*[digit(j).alias(f"k{j}") for j in range(d)])
+
+
+def _ring_candidates(queries: DataFrame, t: DataFrame, d: int, cell: float, ring: int) -> DataFrame:
+    """Queries (``q0..``) exploded to their (2·ring+1)^d neighbour cells —
+    one chained explode per dimension, JVM-side — equi-joined to the
+    keyed points ``t`` (shuffle_hash hint: the point table is never
+    broadcast)."""
+    qe = queries
+    for j in range(d):
+        qe = qe.withColumn(f"_o{j}", F.explode(F.expr(f"sequence({-ring}, {ring})")))
+    qe = qe.withColumn("cell_key", _cell_key("q", d, cell, offsets=True))
+    return qe.join(t.hint("shuffle_hash"), "cell_key")
+
+
 def knn_points_bucketed(
     queries: DataFrame,
     points: DataFrame,
@@ -103,21 +143,8 @@ def knn_points_bucketed(
     """Exact spatial kNN over CELL-BUCKETED candidates — the scale path
     promised by the north rule and by ``apply_rat_knn``'s contract
     (ref: src/rastergis/RSGISRATKNN.cpp:390-420, which linearly scans
-    all training rows; here the scan is restricted to the k-ring).
-
-    Two-phase plan, pure Catalyst (no UDF, NO broadcast of ``points``):
-
-    1. bucket ``points`` by cell key; explode each query to its ring of
-       candidate cells; equi-join on the cell key (shuffle_hash hint so
-       the optimizer never broadcasts the point table);
-    2. exact refine: dist² + ``row_number() ≤ k`` per query.
-
-    Exactness: any point outside ring R is at distance > R·cell from the
-    query, so a query is RESOLVED once its kth-candidate distance is
-    ≤ R·cell (or R·cell ≥ dist_thres / the world span). Unresolved
-    queries re-run with a doubled ring — each round is a distributed
-    pass over only the remaining queries, so the common case is one
-    round plus a cheap empty check.
+    all training rows; here the scan is restricted to the k-ring). The
+    d=2 case of :func:`knn_features_bucketed` over ``(x_col, y_col)``.
 
     Neighbours at ``dist >= dist_thres`` are excluded (strict ``<``,
     matching knn_apply / the reference's dist_thres test). Queries with
@@ -127,125 +154,10 @@ def knn_points_bucketed(
     (d2, nbr_id) — deterministic across engines when coordinates live
     on an integer lattice (d2 is then integer-valued).
     """
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(x_col).cast("double").alias("qx"),
-        F.col(y_col).cast("double").alias("qy"),
+    return knn_features_bucketed(
+        queries, points, [x_col, y_col], k=k, cell=cell,
+        dist_thres=dist_thres, id_col=id_col, exclude_self=exclude_self,
     )
-    t = points.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(x_col).cast("double").alias("tx"),
-        F.col(y_col).cast("double").alias("ty"),
-    )
-    t = _with_cell_key(t, cell, "tx", "ty", "cell_key")
-
-    stats = points.agg(
-        F.min(x_col).alias("pminx"),
-        F.max(x_col).alias("pmaxx"),
-        F.min(y_col).alias("pminy"),
-        F.max(y_col).alias("pmaxy"),
-        F.count("*").alias("n"),
-    ).first()
-    qstats = queries.agg(
-        F.min(x_col).alias("qminx"),
-        F.max(x_col).alias("qmaxx"),
-        F.min(y_col).alias("qminy"),
-        F.max(y_col).alias("qmaxy"),
-    ).first()
-    world_span = max(
-        float(stats["pmaxx"] or 0.0) - float(stats["pminx"] or 0.0),
-        float(stats["pmaxy"] or 0.0) - float(stats["pminy"] or 0.0),
-    )
-    # span of the COMBINED query+point extent: a query outside the point
-    # bbox must still reach every point cell on the forced final ring, so
-    # max_ring is derived from both tables, not the points alone
-    comb_span = max(
-        max(float(stats["pmaxx"] or 0.0), float(qstats["qmaxx"] or 0.0))
-        - min(float(stats["pminx"] or 0.0), float(qstats["qminx"] or 0.0)),
-        max(float(stats["pmaxy"] or 0.0), float(qstats["qmaxy"] or 0.0))
-        - min(float(stats["pminy"] or 0.0), float(qstats["qminy"] or 0.0)),
-    )
-    n_points = int(stats["n"])
-    # ring that covers every point from any query — the forced last round
-    max_ring = max(1, int(math.ceil(comb_span / cell)) + 1)
-    thres2 = dist_thres * dist_thres
-
-    # density-informed initial ring: radius expected to contain k points
-    # (self-corrects a badly-undersized cell choice — e.g. sparse data —
-    # without paying many escalation rounds)
-    area = max(world_span, cell) ** 2
-    density = n_points / area if area > 0 else 0.0
-    if density > 0:
-        r_expect = math.sqrt((k + 1) / (math.pi * density))
-        ring = max(1, int(math.ceil(r_expect / cell)))
-    else:
-        ring = 1
-    ring = min(ring, max_ring)
-    # beyond this ring the (2r+1)² cell explode costs more than a plain
-    # repartition cross-join of the (few) remaining queries × points
-    XJOIN_RING = 48
-
-    remaining = q0.withColumn(
-        "_qix", F.floor(F.col("qx") / F.lit(cell)).cast("long")
-    ).withColumn("_qiy", F.floor(F.col("qy") / F.lit(cell)).cast("long"))
-
-    outs = []
-    persisted = []
-    while True:
-        ring = min(ring, max_ring)
-        # a ring beyond the explode cutoff finalizes via cross-join: the
-        # cross-join is EXACT for any ring (all points are candidates),
-        # and a (2r+1)² explode at large r is far worse
-        final_round = (
-            ring >= max_ring or ring * cell >= dist_thres or ring > XJOIN_RING
-        )
-        base = remaining.select("query_id", "qx", "qy", "_qix", "_qiy")
-        if final_round and ring > XJOIN_RING:
-            # exact last resort: all points are candidates (no broadcast —
-            # Spark cartesian shuffles both sides)
-            cand = base.drop("_qix", "_qiy").crossJoin(t.drop("cell_key"))
-        else:
-            qe = base.select("*", _ring_offsets_expr(ring).alias("o")).withColumn(
-                "cell_key",
-                (F.col("_qix") + F.col("o.dx")) * F.lit(GRID_DIM)
-                + (F.col("_qiy") + F.col("o.dy")),
-            )
-            cand = qe.join(t.hint("shuffle_hash"), "cell_key")
-        if exclude_self:
-            cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-        cand = cand.withColumn(
-            "d2",
-            (F.col("qx") - F.col("tx")) * (F.col("qx") - F.col("tx"))
-            + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty")),
-        )
-        if np.isfinite(dist_thres):
-            cand = cand.filter(F.col("d2") < F.lit(thres2))
-        win = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("nbr_id"))
-        ranked = (
-            cand.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", "d2", "rank")
-        )
-        if final_round:
-            outs.append(ranked)
-            break
-        ranked = ranked.persist()
-        persisted.append(ranked)
-        guar2 = float(ring * cell) ** 2
-        resolved = (
-            ranked.groupBy("query_id")
-            .agg(F.count("*").alias("cnt"), F.max("d2").alias("maxd2"))
-            .filter((F.col("cnt") >= k) & (F.col("maxd2") <= F.lit(guar2)))
-            .select("query_id")
-        )
-        outs.append(ranked.join(resolved, "query_id"))
-        remaining = remaining.join(resolved, "query_id", "left_anti").persist()
-        persisted.append(remaining)
-        if remaining.isEmpty():
-            break
-        ring *= 4
-
-    return _union_and_release(outs, persisted)
 
 
 def knn_features_bucketed(
@@ -264,13 +176,23 @@ def knn_features_bucketed(
     linearly scans all training rows; knn_apply broadcasts them; this
     restricts the scan to the Chebyshev cell neighbourhood).
 
-    Same two-phase + ring-escalation design as
-    :func:`knn_points_bucketed`, generalised to d dims: candidates =
-    the (2r+1)^d ring (one chained explode per dimension, pure
-    Catalyst), exact refine + row_number ≤ k, resolution guarantee
-    d_k ≤ r·cell (any point outside the Chebyshev ring R is at L∞ —
-    hence L2 — distance > R·cell, in every dimension count). Returns
-    (query_id, nbr_id, d2, rank).
+    Two-phase plan, pure Catalyst (no UDF, NO broadcast of ``points``):
+
+    1. bucket ``points`` by cell key; explode each query to its
+       (2r+1)^d ring of candidate cells (one chained explode per
+       dimension); equi-join on the cell key (shuffle_hash hint so the
+       optimizer never broadcasts the point table);
+    2. exact refine: d2 + ``row_number() ≤ k`` per query, ordered by
+       (d2, nbr_id).
+
+    Exactness: any point outside the Chebyshev ring R is at L∞ — hence
+    L2 — distance > R·cell, in every dimension count, so a query is
+    RESOLVED once its kth-candidate distance is ≤ R·cell (or R·cell ≥
+    dist_thres / the combined query+point span). Unresolved queries
+    re-run with a 4× ring — each round is a distributed pass over only
+    the remaining queries, so the common case is one round plus a cheap
+    empty check. Neighbours at ``dist >= dist_thres`` are excluded.
+    Returns (query_id, nbr_id, d2, rank).
 
     Cell key: d ≤ 3 packs the per-dim indices into ONE long (radix
     GRID_DIM — cheapest shuffle key; indices must fit 21 bits); d ≥ 4
@@ -284,35 +206,9 @@ def knn_features_bucketed(
     d = len(feat_cols)
     if d < 1:
         raise ValueError("knn_features_bucketed needs at least 1 feature dim")
-    q0 = queries.select(
-        F.col(id_col).alias("query_id"),
-        *[F.col(c).cast("double").alias(f"q{j}") for j, c in enumerate(feat_cols)],
-    )
-    t = points.select(
-        F.col(id_col).alias("nbr_id"),
-        *[F.col(c).cast("double").alias(f"t{j}") for j, c in enumerate(feat_cols)],
-    )
-
-    def key_from(prefix: str, df: DataFrame, offsets=None) -> F.Column:
-        def digit(j):
-            idx = F.floor(F.col(f"{prefix}{j}") / F.lit(cell)).cast("long")
-            if offsets is not None:
-                idx = idx + F.col(f"_o{j}")
-            return idx
-
-        if d <= 3:
-            # radix-packed d-digit key; digits shifted by half the radix
-            # so negative feature indices stay injective (signed digits
-            # with magnitude near GRID_DIM/2 would otherwise collide
-            # across adjacent high digits)
-            kcol = F.lit(0).cast("long")
-            for j in range(d):
-                kcol = kcol * F.lit(GRID_DIM) + digit(j) + F.lit(GRID_DIM // 2)
-            return kcol
-        # d ≥ 4: struct key — no packing budget, joins on struct equality
-        return F.struct(*[digit(j).alias(f"k{j}") for j in range(d)])
-
-    t = t.withColumn("cell_key", key_from("t", t))
+    q0 = _prefixed(queries, id_col, "query_id", "q", feat_cols)
+    t = _prefixed(points, id_col, "nbr_id", "t", feat_cols)
+    t = t.withColumn("cell_key", _cell_key("t", d, cell))
 
     stats = points.agg(
         *[F.min(c).alias(f"pmin{j}") for j, c in enumerate(feat_cols)],
@@ -366,25 +262,15 @@ def knn_features_bucketed(
         final_round = (
             ring >= max_ring or ring * cell >= dist_thres or ring > XJOIN_RING
         )
-        base = remaining
         if final_round and ring > XJOIN_RING:
-            cand = base.crossJoin(t.drop("cell_key"))
+            # exact last resort: all points are candidates (no broadcast —
+            # Spark cartesian shuffles both sides)
+            cand = remaining.crossJoin(t.drop("cell_key"))
         else:
-            qe = base
-            for j in range(d):
-                qe = qe.withColumn(
-                    f"_o{j}",
-                    F.explode(F.expr(f"sequence({-ring}, {ring})")),
-                )
-            qe = qe.withColumn("cell_key", key_from("q", qe, offsets=True))
-            cand = qe.join(t.hint("shuffle_hash"), "cell_key")
+            cand = _ring_candidates(remaining, t, d, cell, ring)
         if exclude_self:
             cand = cand.filter(F.col("query_id") != F.col("nbr_id"))
-        d2 = F.lit(0.0)
-        for j in range(d):
-            diff = F.col(f"q{j}") - F.col(f"t{j}")
-            d2 = d2 + diff * diff
-        cand = cand.withColumn("d2", d2)
+        cand = cand.withColumn("d2", _d2(d))
         if np.isfinite(dist_thres):
             cand = cand.filter(F.col("d2") < F.lit(thres2))
         win = W.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("nbr_id"))
@@ -434,30 +320,12 @@ def radius_count_bucketed(
     cell = float(cell if cell is not None else radius)
     if cell < radius:
         raise ValueError("cell must be >= radius for ring-1 coverage")
-    t = points.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(x_col).cast("double").alias("tx"),
-        F.col(y_col).cast("double").alias("ty"),
-    )
-    t = _with_cell_key(t, cell, "tx", "ty", "cell_key")
-    q = points.select(
-        F.col(id_col).alias("query_id"),
-        F.col(x_col).cast("double").alias("qx"),
-        F.col(y_col).cast("double").alias("qy"),
-    ).withColumn("_qix", F.floor(F.col("qx") / F.lit(cell)).cast("long")).withColumn(
-        "_qiy", F.floor(F.col("qy") / F.lit(cell)).cast("long")
-    )
-    qe = q.select("*", _ring_offsets_expr(1).alias("o")).withColumn(
-        "cell_key",
-        (F.col("_qix") + F.col("o.dx")) * F.lit(GRID_DIM)
-        + (F.col("_qiy") + F.col("o.dy")),
-    )
+    xy = [x_col, y_col]
+    t = _prefixed(points, id_col, "nbr_id", "t", xy)
+    t = t.withColumn("cell_key", _cell_key("t", 2, cell))
+    q = _prefixed(points, id_col, "query_id", "q", xy)
     r2 = float(radius) * float(radius)
-    cand = qe.join(t.hint("shuffle_hash"), "cell_key").filter(
-        (F.col("qx") - F.col("tx")) * (F.col("qx") - F.col("tx"))
-        + (F.col("qy") - F.col("ty")) * (F.col("qy") - F.col("ty"))
-        <= F.lit(r2)
-    )
+    cand = _ring_candidates(q, t, 2, cell, 1).filter(_d2(2) <= F.lit(r2))
     return cand.groupBy(F.col("query_id").alias(id_col)).agg(
         (F.count("*") - F.lit(1)).alias("n_in_radius")
     )

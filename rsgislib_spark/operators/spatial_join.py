@@ -70,32 +70,42 @@ class ZoneIndex:
         return cls(zones_pdf["zone_id"].to_numpy(), list(zones_pdf["geometry"]))
 
     def match(self, rects: np.ndarray, join_op: str):
-        """(rect_idx, zone_pos) arrays of exact predicate matches.
-
-        Candidates are grouped per zone by argsort + segment slicing —
-        O(P log P) in the pair count P, NOT O(|zones|·P) boolean masks
-        (the mask formulation was >80% of the north-star match cost)."""
+        """(rect_idx, zone_pos) arrays of exact predicate matches, grouped
+        by zone: STR tree candidates, then :meth:`refine`."""
         if join_op not in JOIN_OPS:
             raise ValueError(f"join_op must be one of {JOIN_OPS}")
         qi, zi = self.tree.query(rects)
-        if len(qi) == 0:
-            return qi, zi
         order = np.argsort(zi, kind="stable")
         qs, zs = qi[order], zi[order]
+        keep = self.refine(rects[qs], zs, join_op)
+        return qs[keep], zs[keep]
+
+    def refine(self, rects: np.ndarray, zone_pos: np.ndarray, join_op: str) -> np.ndarray:
+        """Exact ``join_op`` mask of candidate pairs (``rects[i]``, zone at
+        position ``zone_pos[i]``).
+
+        Pairs are grouped per zone by a stable argsort (linear on the
+        zone-sorted pairs :meth:`match` hands in) + segment slicing —
+        O(P log P) in the pair count P, NOT O(|zones|·P) boolean masks
+        (the mask formulation was >80% of the north-star match cost)."""
+        if len(zone_pos) == 0:
+            return np.zeros(0, dtype=bool)
+        order = np.argsort(zone_pos, kind="stable")
+        zs = zone_pos[order]
         starts = np.flatnonzero(np.r_[True, zs[1:] != zs[:-1]])
         ends = np.r_[starts[1:], len(zs)]
-        keep = np.zeros(len(qs), dtype=bool)
+        keep = np.zeros(len(zs), dtype=bool)
         for a, b in zip(starts, ends):
-            z = int(zs[a])
-            sub = rects[qs[a:b]]
+            rows = order[a:b]
+            rings = self.rings[int(zs[a])]
             if join_op == "intersects":
-                ok = geom.rect_intersects_polygon(sub, self.rings[z])
+                ok = geom.rect_intersects_polygon(rects[rows], rings)
             elif join_op == "within":
-                ok = geom.rect_within_polygon(sub, self.rings[z])
+                ok = geom.rect_within_polygon(rects[rows], rings)
             else:  # contains: image rect ⊇ zone polygon
-                ok = geom.rect_contains_polygon(sub, self.rings[z])
-            keep[a:b] = ok
-        return qs[keep], zs[keep]
+                ok = geom.rect_contains_polygon(rects[rows], rings)
+            keep[rows] = ok
+        return keep
 
 
 def _pairs_df(images: DataFrame, zindex_b, join_op: str, id_col: str) -> DataFrame:
@@ -223,31 +233,19 @@ def spatial_join_cells(
 
     def _refine(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         zx: ZoneIndex = zindex_b.value
-        pos = {int(z): i for i, z in enumerate(zx.zone_ids)}
+        # zone_id → position in the index (the last one for a repeated id)
+        sorter = np.argsort(zx.zone_ids, kind="stable")
         for pdf in it:
             if not len(pdf):
                 continue
             rects = pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(dtype=np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for z, grp in pdf.groupby("zone_id"):
-                rows = grp.index.to_numpy()
-                loc = pdf.index.get_indexer(rows)
-                sub = rects[loc]
-                rings = zx.rings[pos[int(z)]]
-                if join_op == "intersects":
-                    ok = geom.rect_intersects_polygon(sub, rings)
-                elif join_op == "within":
-                    ok = geom.rect_within_polygon(sub, rings)
-                else:
-                    ok = geom.rect_contains_polygon(sub, rings)
-                keep[loc] = ok
-            out = pdf.loc[keep, [id_col, "zone_id"]]
-            yield out
+            zids = pdf["zone_id"].to_numpy(np.int64)
+            pos = sorter[np.searchsorted(zx.zone_ids, zids, side="right", sorter=sorter) - 1]
+            yield pdf.loc[zx.refine(rects, pos, join_op), [id_col, "zone_id"]]
 
     pairs = cand.mapInPandas(_refine, schema=schema)
     if join_how == "inner":
         return pairs
-    id_type = dict(images.dtypes)[id_col]
     if join_how == "left":
         unmatched = (
             images.select(id_col)

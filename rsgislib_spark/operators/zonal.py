@@ -29,10 +29,10 @@ the decode bench).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 from rsgislib_spark.datagen import PIXEL_SIZE
-from rsgislib_spark.kernels import codecs, pixelmath
+from rsgislib_spark.kernels import codecs, geom, pixelmath
 from rsgislib_spark.kernels.arrowmap import arrow_map, concat_columns
 from rsgislib_spark.operators.spatial_join import ZoneIndex
 #: Driver fence for the broadcast side (fenced_small_pdf) — patchable in tests.
@@ -98,16 +98,17 @@ def segment_stats(images: DataFrame, segments: DataFrame) -> DataFrame:
             cnt = np.bincount(lab, minlength=nz)
             s = np.bincount(lab, weights=img, minlength=nz)
             ss = np.bincount(lab, weights=img * img, minlength=nz)
-            order = np.argsort(lab, kind="stable")
-            sorted_vals = img[order]
-            bounds = np.concatenate(([0], np.cumsum(cnt)))
-            mn = np.array([sorted_vals[bounds[i]:bounds[i + 1]].min() if cnt[i] else np.nan for i in range(nz)])
-            mx = np.array([sorted_vals[bounds[i]:bounds[i + 1]].max() if cnt[i] else np.nan for i in range(nz)])
+            sorted_vals = img[np.argsort(lab, kind="stable")]
             keep = cnt > 0
+            # non-empty segment starts are strictly increasing, so each
+            # reduceat span is exactly one segment's values
+            starts = (np.cumsum(cnt) - cnt)[keep]
             outs.append({
                 "image_id": [ids[k]] * int(keep.sum()),
                 "zone": np.arange(nz, dtype=np.int32)[keep],
-                "n": cnt[keep], "s": s[keep], "ss": ss[keep], "mn": mn[keep], "mx": mx[keep],
+                "n": cnt[keep], "s": s[keep], "ss": ss[keep],
+                "mn": np.minimum.reduceat(sorted_vals, starts),
+                "mx": np.maximum.reduceat(sorted_vals, starts),
             })
         return concat_columns(outs)
 
@@ -156,8 +157,6 @@ def segment_mode(images: DataFrame, segments: DataFrame) -> DataFrame:
     """Per-(image, segment) modal pixel value; ties → smallest value
     (deterministic; the reference's histogram scan picks the first bin)."""
     hist = segment_histogram(images, segments)
-    from pyspark.sql import Window as W
-
     win = W.partitionBy("image_id", "zone").orderBy(
         F.desc("cnt"), F.asc("value")
     )
@@ -166,6 +165,73 @@ def segment_mode(images: DataFrame, segments: DataFrame) -> DataFrame:
         .filter("rn = 1")
         .select("image_id", "zone", F.col("value").alias("mode"))
     )
+
+
+def _zone_pixel_map(
+    images: DataFrame,
+    zones: DataFrame,
+    fold,
+    schema: str,
+    no_data_val: float | None,
+    pixel_size: float,
+    dtype,
+) -> DataFrame:
+    """The polygon zone-pixel selection both polygon zonal operators
+    share: zones are collected (fenced) and broadcast as a ZoneIndex; one
+    Arrow pass over ``images`` hands ``fold`` an iterator of
+    ``(zone_id, vals)`` — per (image, candidate zone), the ``dtype``
+    values of the pixels whose CENTRE falls inside the polygon, within the
+    reference's envelope window (``pixelmath.zonal_window``), no-data
+    dropped, never empty — and ``fold`` returns that batch's output
+    columns (or None) under ``schema``."""
+    from rsgislib_spark.qcommon import fenced_small_pdf
+
+    zones_pdf = fenced_small_pdf(
+        zones.select("zone_id", "geometry"),
+        "zonal broadcast zone index",
+        "Bucket zones to cells and aggregate per cell instead.",
+        max_rows=MAX_BROADCAST_ZONES,
+    )
+    zindex_b = images.sparkSession.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
+    src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
+
+    def _pixels(cols):
+        zx: ZoneIndex = zindex_b.value
+        views, ws, hs, fmts, minxs, minys = (
+            cols[c] for c in ("bytes", "w", "h", "fmt", "minx", "miny")
+        )
+        for k in range(len(views)):
+            h, w = int(hs[k]), int(ws[k])
+            minx, miny = float(minxs[k]), float(minys[k])
+            maxy = miny + h * pixel_size
+            maxx = minx + w * pixel_size
+            _, zi = zx.tree.query(np.array([[minx, miny, maxx, maxy]]))
+            if len(zi) == 0:
+                continue
+            img = codecs.decode_image(views[k], fmts[k], h, w)
+            for z in zi:
+                zb = zx.bboxes[z]
+                # envelope → pixel window with the reference's rule
+                x1, y1, xs, ys, have = pixelmath.zonal_window(
+                    [zb[0]], [zb[2]], [zb[1]], [zb[3]],
+                    minx, maxy, pixel_size, pixel_size, w, h,
+                )
+                if not have[0]:
+                    continue
+                x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
+                sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
+                # pixel centers of the window
+                pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
+                pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
+                gx, gy = np.meshgrid(pcx, pcy)
+                mask = geom.points_in_polygon(gx.ravel(), gy.ravel(), zx.rings[z])
+                vals = sub[mask.reshape(sub.shape)].astype(dtype)
+                if no_data_val is not None:
+                    vals = vals[vals != no_data_val]
+                if vals.size:
+                    yield int(zx.zone_ids[z]), vals
+
+    return arrow_map(src, lambda cols: fold(_pixels(cols)), schema)
 
 
 def zonal_band_stats(
@@ -182,73 +248,26 @@ def zonal_band_stats(
     partials. Returns zone_id + count/min/max/mean/sum/stddev (null stats
     for zones with zero valid pixels — the reference's no-data fill rule).
     """
-    spark = images.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
 
-    zones_pdf = fenced_small_pdf(
-        zones.select("zone_id", "geometry"),
-        "zonal broadcast zone index",
-        "Bucket zones to cells and aggregate per cell instead.",
-        max_rows=MAX_BROADCAST_ZONES,
-    )
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
-
-    src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
-
-    def _partial(cols):
-        zx: ZoneIndex = zindex_b.value
-        views, ws, hs, fmts, minxs, minys = (
-            cols[c] for c in ("bytes", "w", "h", "fmt", "minx", "miny")
-        )
+    def _partial(pixels):
         acc = {}
-        for k in range(len(views)):
-            h, w = int(hs[k]), int(ws[k])
-            minx, miny = float(minxs[k]), float(minys[k])
-            maxy = miny + h * pixel_size
-            maxx = minx + w * pixel_size
-            qi, zi = zx.tree.query(
-                np.array([[minx, miny, maxx, maxy]])
-            )
-            if len(zi) == 0:
+        for zid, vals in pixels:
+            vals = vals[(vals >= min_thres) & (vals <= max_thres)]
+            if vals.size == 0:
                 continue
-            img = codecs.decode_image(views[k], fmts[k], h, w).astype(np.float64)
-            for z in zi:
-                rings = zx.rings[z]
-                zb = zx.bboxes[z]
-                # envelope → pixel window with the reference's rule
-                x1, y1, xs, ys, have = pixelmath.zonal_window(
-                    [zb[0]], [zb[2]], [zb[1]], [zb[3]],
-                    minx, maxy, pixel_size, pixel_size, w, h,
-                )
-                if not have[0]:
-                    continue
-                x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
-                sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
-                # pixel centers of the window
-                pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
-                pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
-                gx, gy = np.meshgrid(pcx, pcy)
-                mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
-                vals = sub[mask]
-                if no_data_val is not None:
-                    vals = vals[vals != no_data_val]
-                vals = vals[(vals >= min_thres) & (vals <= max_thres)]
-                if vals.size == 0:
-                    continue
-                zid = int(zx.zone_ids[z])
-                a = acc.get(zid)
-                stat = (
-                    vals.size, float(vals.sum()), float((vals * vals).sum()),
-                    float(vals.min()), float(vals.max()),
-                )
-                if a is None:
-                    acc[zid] = list(stat)
-                else:
-                    a[0] += stat[0]
-                    a[1] += stat[1]
-                    a[2] += stat[2]
-                    a[3] = min(a[3], stat[3])
-                    a[4] = max(a[4], stat[4])
+            a = acc.get(zid)
+            stat = (
+                vals.size, float(vals.sum()), float((vals * vals).sum()),
+                float(vals.min()), float(vals.max()),
+            )
+            if a is None:
+                acc[zid] = list(stat)
+            else:
+                a[0] += stat[0]
+                a[1] += stat[1]
+                a[2] += stat[2]
+                a[3] = min(a[3], stat[3])
+                a[4] = max(a[4], stat[4])
         if not acc:
             return None
         zids = sorted(acc)
@@ -256,14 +275,22 @@ def zonal_band_stats(
             c: [acc[z][i] for z in zids] for i, c in enumerate(("n", "s", "ss", "mn", "mx"))
         }}
 
-    partials = arrow_map(src, _partial, _PARTIAL_SCHEMA)
+    partials = _zone_pixel_map(
+        images, zones, _partial, _PARTIAL_SCHEMA, no_data_val, pixel_size, np.float64
+    )
     return _finalize(partials)
 
 
-def zx_points_in(rings, px, py):
-    from rsgislib_spark.kernels.geom import points_in_polygon
-
-    return points_in_polygon(px, py, rings)
+def _cumulative_counts(hist: DataFrame, key_cols: list, value_col: str, cnt_col: str) -> DataFrame:
+    """``hist`` plus, per key, ``cum`` — the running count in ascending
+    value order — and ``n`` — the key's total count: the cumulative
+    histogram the order-statistic readers below select from."""
+    wcum = W.partitionBy(*key_cols).orderBy(F.asc(value_col)).rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    return hist.withColumn("cum", F.sum(cnt_col).over(wcum)).withColumn(
+        "n", F.sum(cnt_col).over(W.partitionBy(*key_cols))
+    )
 
 
 def mode_median_from_histogram(
@@ -282,15 +309,7 @@ def mode_median_from_histogram(
     cumulative histogram: lo = value at position (n+1)//2, hi = value at
     position n//2 + 1 (1-based). Returns key_cols + n_px, mode, median.
     """
-    from pyspark.sql import Window as W
-
-    keys = [F.col(k) for k in key_cols]
-    wcum = W.partitionBy(*keys).orderBy(F.asc(value_col)).rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    cum = hist.withColumn("cum", F.sum(cnt_col).over(wcum)).withColumn(
-        "n", F.sum(cnt_col).over(W.partitionBy(*keys))
-    )
+    cum = _cumulative_counts(hist, key_cols, value_col, cnt_col)
     lo = (
         # Integer rank (n+1)//2, matching the DuckDB oracle's (n_px+1)//2 —
         # double division (n+1)/2 would give e.g. 2.5 for n=4 and select the
@@ -304,7 +323,7 @@ def mode_median_from_histogram(
         .groupBy(*key_cols)
         .agg(F.min(value_col).alias("vhi"))
     )
-    wmode = W.partitionBy(*keys).orderBy(F.desc(cnt_col), F.asc(value_col))
+    wmode = W.partitionBy(*key_cols).orderBy(F.desc(cnt_col), F.asc(value_col))
     md = (
         hist.withColumn("rn", F.row_number().over(wmode))
         .filter("rn = 1")
@@ -342,15 +361,7 @@ def percentiles_from_histogram(
     value whose cumulative count reaches ceil(p·n). Integer-exact, so
     the DuckDB oracle reproduces it bit-for-bit. Returns key_cols +
     n_px + one p{NN} column per requested percentile."""
-    from pyspark.sql import Window as W
-
-    keys = [F.col(k) for k in key_cols]
-    wcum = W.partitionBy(*keys).orderBy(F.asc(value_col)).rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    cum = hist.withColumn("cum", F.sum(cnt_col).over(wcum)).withColumn(
-        "n", F.sum(cnt_col).over(W.partitionBy(*keys))
-    )
+    cum = _cumulative_counts(hist, key_cols, value_col, cnt_col)
     from fractions import Fraction
 
     out = hist.groupBy(*key_cols).agg(F.sum(cnt_col).alias("n_px"))
@@ -385,57 +396,13 @@ def zonal_band_mode_median(
     operator doesn't cover. Partials are per-(zone, value) histogram
     counts — 256 rows per zone max — so the shuffle stays O(zones·256)
     regardless of pixel count."""
-    spark = images.sparkSession
-    from rsgislib_spark.qcommon import fenced_small_pdf
 
-    zones_pdf = fenced_small_pdf(
-        zones.select("zone_id", "geometry"),
-        "zonal broadcast zone index",
-        "Bucket zones to cells and aggregate per cell instead.",
-        max_rows=MAX_BROADCAST_ZONES,
-    )
-    zindex_b = spark.sparkContext.broadcast(ZoneIndex.from_pandas(zones_pdf))
-    src = images.select("bytes", "w", "h", "fmt", "minx", "miny")
-
-    def _hist(cols):
-        zx: ZoneIndex = zindex_b.value
-        views, ws, hs, fmts, minxs, minys = (
-            cols[c] for c in ("bytes", "w", "h", "fmt", "minx", "miny")
-        )
+    def _hist(pixels):
         acc: dict = {}
-        for k in range(len(views)):
-            h, w = int(hs[k]), int(ws[k])
-            minx, miny = float(minxs[k]), float(minys[k])
-            maxy = miny + h * pixel_size
-            maxx = minx + w * pixel_size
-            qi, zi = zx.tree.query(np.array([[minx, miny, maxx, maxy]]))
-            if len(zi) == 0:
-                continue
-            img = codecs.decode_image(views[k], fmts[k], h, w)
-            for z in zi:
-                rings = zx.rings[z]
-                zb = zx.bboxes[z]
-                x1, y1, xs, ys, have = pixelmath.zonal_window(
-                    [zb[0]], [zb[2]], [zb[1]], [zb[3]],
-                    minx, maxy, pixel_size, pixel_size, w, h,
-                )
-                if not have[0]:
-                    continue
-                x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
-                sub = img[y1_ : y1_ + ys_, x1_ : x1_ + xs_]
-                pcx = minx + (np.arange(x1_, x1_ + xs_) + 0.5) * pixel_size
-                pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * pixel_size
-                gx, gy = np.meshgrid(pcx, pcy)
-                mask = zx_points_in(rings, gx.ravel(), gy.ravel()).reshape(sub.shape)
-                vals = sub[mask].astype(np.int64)
-                if no_data_val is not None:
-                    vals = vals[vals != no_data_val]
-                if not vals.size:
-                    continue
-                zid = int(zx.zone_ids[z])
-                counts = np.bincount(vals, minlength=256)
-                prev = acc.get(zid)
-                acc[zid] = counts if prev is None else prev + counts
+        for zid, vals in pixels:
+            counts = np.bincount(vals, minlength=256)
+            prev = acc.get(zid)
+            acc[zid] = counts if prev is None else prev + counts
         if not acc:
             return None
         zids = sorted(acc)
@@ -446,6 +413,9 @@ def zonal_band_mode_median(
             "cnt": np.concatenate([acc[z][v] for z, v in zip(zids, nz)]),
         }
 
-    partial = arrow_map(src, _hist, "zone_id long, value int, cnt long")
+    partial = _zone_pixel_map(
+        images, zones, _hist, "zone_id long, value int, cnt long",
+        no_data_val, pixel_size, np.int64,
+    )
     hist = partial.groupBy("zone_id", "value").agg(F.sum("cnt").alias("cnt"))
     return mode_median_from_histogram(hist, ["zone_id"])

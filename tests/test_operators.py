@@ -233,6 +233,87 @@ class TestZonal:
             assert got.loc[zid, "n_px"] == vals.size
 
 
+    @staticmethod
+    def _zone_pixel_oracle(images_pdf, zones_pdf, dtype):
+        """zone_id → every in-polygon pixel value (pixel centre inside,
+        within the reference's envelope window), brute force over all
+        image × zone pairs."""
+        acc = {}
+        for rec in images_pdf.itertuples(index=False):
+            img = codecs.decode_image(rec.bytes, rec.fmt, rec.h, rec.w).astype(dtype)
+            maxy = rec.miny + rec.h * datagen.PIXEL_SIZE
+            for z in zones_pdf.itertuples(index=False):
+                x1, y1, xs, ys, have = pixelmath.zonal_window(
+                    [z.minx], [z.maxx], [z.miny], [z.maxy],
+                    rec.minx, maxy, datagen.PIXEL_SIZE, datagen.PIXEL_SIZE,
+                    rec.w, rec.h,
+                )
+                if not have[0]:
+                    continue
+                x1_, y1_, xs_, ys_ = int(x1[0]), int(y1[0]), int(xs[0]), int(ys[0])
+                pcx = rec.minx + (np.arange(x1_, x1_ + xs_) + 0.5) * datagen.PIXEL_SIZE
+                pcy = maxy - (np.arange(y1_, y1_ + ys_) + 0.5) * datagen.PIXEL_SIZE
+                gx, gy = np.meshgrid(pcx, pcy)
+                m = geom.points_in_polygon(gx.ravel(), gy.ravel(), geom.wkb_to_polygon(z.geometry))
+                acc.setdefault(z.zone_id, []).append(
+                    img[y1_ : y1_ + ys_, x1_ : x1_ + xs_].ravel()[m]
+                )
+        return {zid: np.concatenate(chunks) for zid, chunks in acc.items()}
+
+    @staticmethod
+    def _common_value(zone_px):
+        """The pixel value most frequent inside the zones — a no-data value
+        that really drops pixels."""
+        vals = np.concatenate(list(zone_px.values())).astype(np.int64)
+        return float(np.bincount(vals).argmax())
+
+    def test_zonal_band_stats_no_data_and_thresholds(
+        self, spark, images_df, small_images_pdf, zones_pdf
+    ):
+        zone_px = self._zone_pixel_oracle(small_images_pdf, zones_pdf, np.float64)
+        ndv = self._common_value(zone_px)
+        lo, hi = 60.0, 220.0
+        got = (
+            zonal_band_stats(
+                images_df, spark.createDataFrame(zones_pdf),
+                min_thres=lo, max_thres=hi, no_data_val=ndv,
+            )
+            .toPandas().set_index("zone_id")
+        )
+        exp = {}
+        for zid, vals in zone_px.items():
+            vals = vals[(vals != ndv) & (vals >= lo) & (vals <= hi)]
+            if vals.size:
+                exp[zid] = vals
+        assert exp and set(got.index) == set(exp)
+        dropped = sum(int((v == ndv).sum()) for v in zone_px.values())
+        assert dropped > 0
+        for zid, vals in exp.items():
+            row = got.loc[zid]
+            assert row["count"] == vals.size
+            assert row["min"] == vals.min() and row["max"] == vals.max()
+            assert row["sum"] == pytest.approx(vals.sum())
+            assert row["mean"] == pytest.approx(vals.mean())
+            assert row["stddev"] == pytest.approx(vals.std(), abs=1e-9)
+
+    def test_zonal_mode_median_no_data(self, spark, images_df, small_images_pdf, zones_pdf):
+        from rsgislib_spark.operators.zonal import zonal_band_mode_median
+
+        zone_px = self._zone_pixel_oracle(small_images_pdf, zones_pdf, np.int64)
+        ndv = self._common_value(zone_px)
+        got = (
+            zonal_band_mode_median(images_df, spark.createDataFrame(zones_pdf), no_data_val=ndv)
+            .toPandas().set_index("zone_id")
+        )
+        exp = {zid: v[v != ndv] for zid, v in zone_px.items() if (v != ndv).any()}
+        assert exp and set(got.index) == set(exp)
+        for zid, vals in exp.items():
+            u, c = np.unique(vals, return_counts=True)
+            assert got.loc[zid, "mode"] == u[np.argmax(c)]
+            assert got.loc[zid, "median"] == pytest.approx(round(float(np.median(vals)), 1))
+            assert got.loc[zid, "n_px"] == vals.size
+
+
 # ---------------------------------------------------------------- points
 class TestPointExtract:
     def test_values_vs_numpy(self, spark, images_df, small_images_pdf, points_pdf):
@@ -403,6 +484,46 @@ class TestKNN:
             sub = got[got.query_id == qrow.pt_id]
             assert list(sub["nbr_id"]) == list(ids[order])
             assert np.allclose(sub["d2"].to_numpy(), d2[order])
+
+    @pytest.mark.parametrize("exclude_self", [True, False])
+    def test_knn_bucketed_straddling_zero_equals_brute(self, spark, exclude_self):
+        """Points and queries on both sides of 0 on both axes: negative
+        cell indices go through the packed 2-D key, and a small cell
+        forces ring escalation — still exactly brute force."""
+        rng = np.random.default_rng(11)
+        pdf = pd.DataFrame({
+            "pt_id": np.arange(300, dtype=np.int64),
+            "x": rng.integers(-40_000, 40_000, 300).astype(float),
+            "y": rng.integers(-40_000, 40_000, 300).astype(float),
+        })
+        qpdf = pd.DataFrame({
+            "pt_id": np.r_[pdf.pt_id[:20], 1000 + np.arange(20)],
+            "x": np.r_[pdf.x[:20], rng.integers(-45_000, 45_000, 20)].astype(float),
+            "y": np.r_[pdf.y[:20], rng.integers(-45_000, 45_000, 20)].astype(float),
+        })
+        assert (qpdf.x < 0).any() and (qpdf.x > 0).any()
+        assert (qpdf.y < 0).any() and (qpdf.y > 0).any()
+        from rsgislib_spark.operators.knn import knn_points_bucketed
+
+        k = 5
+        got = (
+            knn_points_bucketed(
+                spark.createDataFrame(qpdf), spark.createDataFrame(pdf),
+                k=k, cell=1500.0, exclude_self=exclude_self,
+            )
+            .toPandas()
+            .sort_values(["query_id", "rank"])
+        )
+        xs, ys, ids = pdf["x"].to_numpy(), pdf["y"].to_numpy(), pdf["pt_id"].to_numpy()
+        for q in qpdf.itertuples(index=False):
+            d2 = (xs - q.x) ** 2 + (ys - q.y) ** 2
+            order = np.lexsort((ids, d2))
+            if exclude_self:
+                order = order[ids[order] != q.pt_id]
+            sub = got[got.query_id == q.pt_id]
+            assert list(sub["nbr_id"]) == list(ids[order[:k]]), q.pt_id
+            assert list(sub["rank"]) == list(range(1, k + 1))
+            assert sub["d2"].to_numpy().tolist() == d2[order[:k]].tolist()
 
     def test_knn_bucketed_dist_thres_strict(self, spark, points_pdf):
         from rsgislib_spark.operators.knn import knn_points_bucketed

@@ -63,7 +63,7 @@ def test_broadcast_join_matches_oracle(spark_tables, images_nopix_pdf, zones_pdf
 
 def test_cell_join_matches_broadcast(spark_tables, images_nopix_pdf, zones_pdf):
     images, zones = spark_tables
-    for join_op in ["intersects", "within"]:
+    for join_op in ["intersects", "within", "contains"]:
         a = (
             spatial_join_broadcast(images, zones, join_op=join_op)
             .select("image_id", "zone_id").toPandas()
@@ -123,6 +123,39 @@ def test_zone_index_pickles(zones_pdf):
     b = zx2.match(rects, "intersects")
     np.testing.assert_array_equal(a[0], b[0])
     np.testing.assert_array_equal(a[1], b[1])
+
+
+@pytest.mark.parametrize("join_op", ["intersects", "within", "contains"])
+def test_zone_index_refine_matches_per_pair_predicate(join_op):
+    """ZoneIndex.refine over unsorted, repeated zone positions == the
+    predicate evaluated pair by pair — on zones small enough to fall
+    inside some rects, so every predicate has matches and misses."""
+    rng = np.random.default_rng(3)
+    centers = rng.uniform(0, 1000, (12, 2))
+    sizes = rng.uniform(20, 60, 12)
+    zones = [
+        geom.polygon_to_wkb([np.array([[cx - s, cy], [cx, cy - s], [cx + s, cy], [cx, cy + s], [cx - s, cy]])])
+        for (cx, cy), s in zip(centers, sizes)
+    ]
+    zx = ZoneIndex(np.arange(100, 112), zones)
+    # rects scattered around their pair's zone, from far inside it to
+    # far around it
+    n = 400
+    pos = rng.integers(0, 12, n)
+    c = centers[pos] + rng.uniform(-1, 1, (n, 2)) * sizes[pos, None]
+    half = np.exp(rng.uniform(0, np.log(3 * sizes[pos, None]), (n, 2)))
+    rects = np.hstack([c - half, c + half])
+    pred = {
+        "intersects": geom.rect_intersects_polygon,
+        "within": geom.rect_within_polygon,
+        "contains": geom.rect_contains_polygon,
+    }[join_op]
+    exp = np.array([pred(rects[i : i + 1], zx.rings[pos[i]])[0] for i in range(n)])
+    got = zx.refine(rects, pos, join_op)
+    assert got.dtype == bool
+    np.testing.assert_array_equal(got, exp)
+    assert exp.any() and not exp.all()
+    assert zx.refine(rects[:0], pos[:0], join_op).shape == (0,)
 
 
 class TestLayerPredicates:
